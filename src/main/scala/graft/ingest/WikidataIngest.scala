@@ -2,6 +2,7 @@ package graft.ingest
 
 import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 /** Wikidata dump → quad-store DataFrames.
   *
@@ -19,23 +20,43 @@ import org.apache.spark.sql.functions._
   */
 object WikidataIngest {
 
-  /** Fixture dump shipped with the reference (5 real entities, 3385
-    * quads — `/root/reference/test_requests.txt:9-14`).
-    */
-  val fixturePath = "/root/reference/tests/data/first_5_lines.txt"
-
   /** Default location of the ingested fixture store inside the repo. */
   val defaultDir = "/root/repo/data/wikidata"
 
-  /** The reference's lexeme example (L4589 "flower", lemmas + 2 forms +
-    * 4 senses), shipped in API-wrapper form (`{"entities":{"L4589":…}}`)
-    * rather than as a dump line (`/root/reference/tests/data/
-    * form_sense_example.txt`).
-    */
-  val lexemeFixturePath = "/root/reference/tests/data/form_sense_example.txt"
-
   /** Default location of the opt-in lexeme fixture store. */
   val lexemeDir = "/root/repo/data/wikidata-lex"
+
+  /** Committed ingest fixtures, beside the fixture stores. */
+  private val fixturesDir = s"${new java.io.File(defaultDir).getParent}/fixtures"
+
+  /** The 5-line entity dump (Q31, Q8, Q23, Q24 → 3385 quads, the
+    * reference's `test_requests.txt:9-14` count). Derived from the
+    * committed [[defaultDir]] store by `tools/derive_fixtures.py`, not
+    * the reference's bytes: it carries every field the parser keeps, and
+    * re-ingesting it reproduces the store row for row including `ord`
+    * (pinned by SparqlFixtureSpec). See FIXTURES.md §1 for what the
+    * parser drops and this file therefore cannot carry.
+    */
+  val fixturePath = s"$fixturesDir/first_5_lines.txt"
+
+  /** The lexeme example (L4589 "flower", lemma + 2 forms + 2 senses) in
+    * API-wrapper form (`{"entities":{"L4589":…}}`) rather than as a dump
+    * line, like the reference's `tests/data/form_sense_example.txt`.
+    * Derived from the committed `dump.jsonl` of [[lexemeDir]]: it is the
+    * exact inverse of [[unwrapEntities]] (pinned by SparqlFixtureSpec).
+    */
+  val lexemeFixturePath = s"$fixturesDir/form_sense_example.txt"
+
+  /** The entity documents of an API-wrapper file
+    * (`{"entities":{id: doc, …}}`) as compact dump lines, in file order.
+    */
+  private[graft] def unwrapEntities(path: String): Seq[String] = {
+    val src = scala.io.Source.fromFile(path, "UTF-8")
+    val rootNode =
+      try new com.fasterxml.jackson.databind.ObjectMapper().readTree(src.mkString)
+      finally src.close()
+    rootNode.get("entities").properties().asScala.map(_.getValue.toString).toSeq
+  }
 
   /** Build (once) and return the lexeme fixture store: the entities of
     * [[lexemeFixturePath]] unwrapped to dump lines and ingested with
@@ -43,15 +64,10 @@ object WikidataIngest {
     */
   def lexemeStore(spark: SparkSession, dir: String = lexemeDir): String = {
     if (!new java.io.File(s"$dir/statements.parquet").exists()) {
-      val src = scala.io.Source.fromFile(lexemeFixturePath, "UTF-8")
-      val rootNode =
-        try new com.fasterxml.jackson.databind.ObjectMapper().readTree(src.mkString)
-        finally src.close()
-      val lines = rootNode.get("entities").properties()
       new java.io.File(dir).mkdirs()
       val dump = new java.io.File(dir, "dump.jsonl")
       val w = new java.io.PrintWriter(dump, "UTF-8")
-      try lines.forEach(e => w.println(e.getValue.toString)) finally w.close()
+      try unwrapEntities(lexemeFixturePath).foreach(w.println) finally w.close()
       build(spark, dump.getAbsolutePath, dir, lexemes = true)
     }
     dir

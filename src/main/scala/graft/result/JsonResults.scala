@@ -1,5 +1,6 @@
 package graft.result
 
+import org.apache.spark.{TaskContext, TaskKilledException}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
@@ -12,8 +13,9 @@ import graft.model.Render
   * binding; ASK renders `{"head":{"vars":[]},"boolean":…}`.
   *
   * The rendering happens distributed (type/value/lang/datatype computed
-  * as Column expressions); only the final JSON assembly collects — the
-  * sink is for protocol responses, which are bounded result sets
+  * as Column expressions, each binding's JSON text built per partition);
+  * only the final JSON assembly runs on the driver — the sink is for
+  * protocol responses, which are bounded result sets
   * (`src/server.rs:114-118`).
   */
 object JsonResults {
@@ -62,11 +64,12 @@ object JsonResults {
       }.getOrElse(limit)
 
   /** Stream the serialization to `out` (UTF-8), returning bytes
-    * written. Rows flow binding-by-binding from `toLocalIterator`, so
-    * driver memory is bounded by ONE partition of rendered strings no
-    * matter how large the result — the 100 TB-safe sink the buffered
-    * [[toJson]] cannot be. Two independent ENFORCED bounds, both
-    * fail-loud, never truncating: `maxRows` (the protocol row cap;
+    * written. Bindings flow partition by partition from
+    * `toLocalIterator`, so driver memory is bounded by ONE partition's
+    * binding texts no matter how large the result — and that partition
+    * itself by `maxBytes` (see [[renderBindings]]): the 100 TB-safe sink
+    * the buffered [[toJson]] cannot be. Two independent ENFORCED bounds,
+    * both fail-loud, never truncating: `maxRows` (the protocol row cap;
     * pass `Int.MaxValue` to disable for streaming consumers) and
     * `maxBytes` (the hard byte budget — a streamed response can abort
     * mid-body, so the budget throws rather than silently closing a
@@ -74,7 +77,11 @@ object JsonResults {
     */
   def writeJson(df: DataFrame, out: java.io.OutputStream,
                 maxBytes: Long, maxRows: Int): Long =
-    prepare(df, maxRows).write(out, maxBytes)
+    prepare(df, maxRows, maxBytes).write(out, maxBytes)
+
+  private def overBudget(maxBytes: Long) = new IllegalStateException(
+    s"result exceeds the $maxBytes-byte budget; " +
+      "raise spark.graft.server.maxResultBytes or add LIMIT to the query")
 
   /** A streaming serialization whose FIRST rows have already been
     * materialized: [[prepare]] runs every Spark job needed to produce
@@ -88,7 +95,7 @@ object JsonResults {
   final class PreparedJson private[JsonResults] (
       askBody: Option[String],
       vars: Seq[String],
-      rows: java.util.Iterator[Row],
+      bindings: Iterator[String],
       maxRows: Int) {
 
     /** Write the serialization to `out` (UTF-8), returning bytes
@@ -102,10 +109,7 @@ object JsonResults {
       def w(s: String): Unit = {
         val b = s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
         written += b.length
-        if (written > maxBytes)
-          throw new IllegalStateException(
-            s"result exceeds the $maxBytes-byte budget; " +
-              "raise spark.graft.server.maxResultBytes or add LIMIT to the query")
+        if (written > maxBytes) throw overBudget(maxBytes)
         out.write(b)
         progress.accept(written)
       }
@@ -118,48 +122,77 @@ object JsonResults {
       val head = vars.map(v => "\"" + esc(v) + "\"").mkString("[", ",", "]")
       w(s"""{"head":{"vars":$head},"results":{"bindings":[""")
       var n = 0
-      while (rows.hasNext) {
-        val row = rows.next()
+      while (bindings.hasNext) {
+        val binding = bindings.next()
         n += 1
         if (n > maxRows)
           throw new IllegalStateException(
             s"result exceeds spark.graft.json.maxRows=$maxRows rows; " +
               "raise the limit or add LIMIT to the query")
-        val fields = vars.zipWithIndex.flatMap { case (v, i) =>
-          val base = i * 5
-          val isNull = row.getBoolean(base + 4)
-          if (isNull) None
-          else {
-            val sb = new StringBuilder
-            sb.append('"').append(esc(v)).append("\":{\"type\":\"")
-              .append(row.getString(base)).append("\",\"value\":\"")
-              .append(esc(Option(row.getString(base + 1)).getOrElse("")))
-              .append('"')
-            Option(row.getString(base + 2)).foreach(l => sb.append(",\"xml:lang\":\"").append(esc(l)).append('"'))
-            Option(row.getString(base + 3)).foreach(d => sb.append(",\"datatype\":\"").append(esc(d)).append('"'))
-            sb.append('}')
-            Some(sb.toString)
-          }
-        }
-        w((if (n > 1) "," else "") + fields.mkString("{", ",", "}"))
+        w((if (n > 1) "," else "") + binding)
       }
       w("]}}")
       written
     }
   }
 
+  /** Executor side of [[prepare]]: each rendered row becomes the JSON
+    * text of its binding object. Two guards make a runaway partition
+    * safe to pull to the driver:
+    *  - the task's kill flag is checked per row, so a cancelled job
+    *    (timeout, client gone) stops at once — a cartesian's inner loop
+    *    never polls it, and a killed task would otherwise keep filling
+    *    the heap until its whole partition is built;
+    *  - a partition whose binding texts alone pass `maxBytes` fails
+    *    with the budget error (the response holding it could not fit
+    *    either), so what one fetch holds is bounded by the byte budget,
+    *    not by the partition's size. Characters count as a lower bound
+    *    on UTF-8 bytes.
+    */
+  private def renderBindings(vars: Seq[String], maxBytes: Long)(
+      rows: Iterator[Row]): Iterator[String] = {
+    val task = TaskContext.get()
+    var chars = 0L
+    rows.map { row =>
+      if (task.isInterrupted()) throw new TaskKilledException
+      val fields = vars.zipWithIndex.flatMap { case (v, i) =>
+        val base = i * 5
+        val isNull = row.getBoolean(base + 4)
+        if (isNull) None
+        else {
+          val sb = new StringBuilder
+          sb.append('"').append(esc(v)).append("\":{\"type\":\"")
+            .append(row.getString(base)).append("\",\"value\":\"")
+            .append(esc(Option(row.getString(base + 1)).getOrElse("")))
+            .append('"')
+          Option(row.getString(base + 2)).foreach(l => sb.append(",\"xml:lang\":\"").append(esc(l)).append('"'))
+          Option(row.getString(base + 3)).foreach(d => sb.append(",\"datatype\":\"").append(esc(d)).append('"'))
+          sb.append('}')
+          Some(sb.toString)
+        }
+      }
+      val binding = fields.mkString("{", ",", "}")
+      chars += binding.length + 1 // + the separating comma
+      if (chars > maxBytes) throw overBudget(maxBytes)
+      binding
+    }
+  }
+
   /** Build a [[PreparedJson]], forcing the first partition of rendered
     * bindings (and the whole job for ASK). Runs on the calling thread,
     * so job-group cancellation set there applies to these jobs.
+    * `maxBytes` bounds each partition's bindings as [[renderBindings]]
+    * says; pass the budget the result will be written under.
     */
-  def prepare(df: DataFrame, maxRows: Int): PreparedJson = {
+  def prepare(df: DataFrame, maxRows: Int,
+              maxBytes: Long = Long.MaxValue): PreparedJson = {
     if (df.columns.sameElements(Array("boolean"))) {
       val b = df.head().getBoolean(0)
       return new PreparedJson(Some(s"""{"head":{"vars":[]},"boolean":$b}"""),
-        Nil, java.util.Collections.emptyIterator[Row](), maxRows)
+        Nil, Iterator.empty, maxRows)
     }
     val vars = df.columns.toSeq
-    // render per-variable fields distributed, collect only strings
+    // render per-variable fields distributed
     val rendered = df.select(vars.flatMap { v =>
       val t = col(v)
       Seq(
@@ -172,10 +205,11 @@ object JsonResults {
     // fetch maxRows+1 so overflow is observable, then fail loudly
     // (clamped: maxRows = Int.MaxValue must not overflow the limit)
     val fetch = math.min(maxRows.toLong + 1, Int.MaxValue.toLong).toInt
-    val rows =
-      if (fetch == Int.MaxValue) rendered.toLocalIterator()
-      else rendered.limit(fetch).toLocalIterator()
-    rows.hasNext // force the first partition's job NOW, on this thread
-    new PreparedJson(None, vars, rows, maxRows)
+    val limited = if (fetch == Int.MaxValue) rendered else rendered.limit(fetch)
+    val bindings = limited.rdd
+      .mapPartitions(renderBindings(vars, maxBytes))
+      .toLocalIterator
+    bindings.hasNext // force the first partition's job NOW, on this thread
+    new PreparedJson(None, vars, bindings, maxRows)
   }
 }

@@ -476,7 +476,10 @@ object QueryServer {
                     // group, where the timeout watchdog can still cancel
                     // it and serve a clean 503. Only a query that has
                     // demonstrably started producing claims the stream.
-                    val prepared = JsonResults.prepare(df, Int.MaxValue)
+                    // The budget also bounds each fetched partition, and
+                    // a cancelled fetch stops at once (renderBindings),
+                    // so a runaway cannot fill the heap after its 503.
+                    val prepared = JsonResults.prepare(df, Int.MaxValue, budget)
                     if (sent.compareAndSet(false, true)) {
                       ex.getResponseHeaders.add("Access-Control-Allow-Origin", "*")
                       ex.getResponseHeaders.add("Content-Type", "application/json")

@@ -4,10 +4,11 @@ import graft.ingest.WikidataIngest
 import graft.sparql.Sparql
 import org.apache.spark.sql.functions.col
 
-/** End-to-end parity on the reference's own fixture and query corpus:
-  * `/root/reference/tests/data/first_5_lines.txt` +
-  * `/root/reference/test_requests.txt` (expected row counts in its
-  * comments) + `query_example.txt`.
+/** End-to-end parity on the reference's fixture and query corpus:
+  * `first_5_lines.txt` (here the store-derived equivalent
+  * [[WikidataIngest.fixturePath]], see FIXTURES.md §1) + the reference's
+  * `test_requests.txt` (expected row counts in its comments) +
+  * `query_example.txt`.
   */
 class SparqlFixtureSpec extends SparkTestBase {
 
@@ -21,6 +22,24 @@ class SparqlFixtureSpec extends SparkTestBase {
 
   test("ingest produces 3385 quads (test_requests.txt:9-14)") {
     assert(WikidataIngest.statements(spark, dir).count() === 3385L)
+  }
+
+  test("derived fixtures reproduce the committed stores they were derived from") {
+    // the fixtures are re-synthesized from data/wikidata and
+    // data/wikidata-lex (tools/derive_fixtures.py), not the reference's
+    // bytes: ingesting the dump must give the store back row for row,
+    // ord included, and unwrapping the API wrapper must give the lexeme
+    // dump line back byte for byte
+    val cols = Seq("s", "p", "o", "id", "graph", "ord").map(col)
+    val got = WikidataIngest.ingest(spark, WikidataIngest.fixturePath).select(cols: _*)
+    val want = spark.read.parquet(s"${WikidataIngest.defaultDir}/statements.parquet")
+      .select(cols: _*)
+    assert(got.exceptAll(want).count() === 0L)
+    assert(want.exceptAll(got).count() === 0L)
+    val dump = java.nio.file.Files.readString(
+      java.nio.file.Path.of(WikidataIngest.lexemeDir, "dump.jsonl"))
+    assert(WikidataIngest.unwrapEntities(WikidataIngest.lexemeFixturePath)
+      .map(_ + "\n").mkString === dump)
   }
 
   test("spec-correct OPTIONAL filter mode diverges from reference parity mode") {
@@ -269,8 +288,7 @@ class SparqlFixtureSpec extends SparkTestBase {
     // has no labels/descriptions/aliases/claims at top level; the
     // reference's serde schema (parser.rs:62-96, required fields) fails
     // the line and produces no quads — replicated behavior.
-    val df = WikidataIngest.ingest(spark,
-      "/root/reference/tests/data/form_sense_example.txt")
+    val df = WikidataIngest.ingest(spark, WikidataIngest.lexemeFixturePath)
     assert(df.count() === 0L)
   }
 

@@ -20,7 +20,7 @@ class StreamingSpec extends SparkTestBase {
     implicit val sq = spark.sqlContext
     val tmp = Files.createTempDirectory("graft-stream").toFile.getAbsolutePath
     val inDir = Files.createDirectory(java.nio.file.Path.of(tmp, "in"))
-    Files.copy(java.nio.file.Path.of("/root/reference/tests/data/first_5_lines.txt"),
+    Files.copy(java.nio.file.Path.of(graft.ingest.WikidataIngest.fixturePath),
       inDir.resolve("lines.txt"))
     val out = s"$tmp/quads"
     val q = StreamingIngest.startIngest(spark, inDir.toString, out, s"$tmp/ckpt")
