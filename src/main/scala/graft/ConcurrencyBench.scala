@@ -39,7 +39,7 @@ object ConcurrencyBench {
   def main(args: Array[String]): Unit = {
     val target = args.lift(0).map(_.toLong).getOrElse(32000000L)
     val baseDir = args.lift(1).getOrElse(
-      java.nio.file.Files.createTempDirectory("graft-concbench").toString)
+      Workspace.scratch("graft-concbench"))
     val levels = args.lift(2).getOrElse("1,8,32").split(",").map(_.trim.toInt).toSeq
     val rounds = args.lift(3).map(_.toInt).getOrElse(4)
 

@@ -7,11 +7,13 @@ import org.apache.spark.sql.SparkSession
   * Tuned for the driver's local[N] harness but every knob is what we'd
   * ship on a real cluster: AQE on (runtime re-plan, skew-join handling,
   * partition coalescing), shuffle partitions sized to cores locally
-  * (on a cluster this would be ~2-3x total executor cores or left to
-  * AQE's coalescing), UTC session time for deterministic date math.
+  * (`SPARK_GRAFT_CPUS`, else the JVM's available processors; on a
+  * cluster this would be ~2-3x total executor cores or left to AQE's
+  * coalescing), UTC session time for deterministic date math.
   */
 object GraftSession {
-  def builder(cores: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")): SparkSession.Builder = {
+  def builder(cores: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)): SparkSession.Builder = {
     val b = SparkSession.builder()
     // respect an externally-configured master (spark-submit --master /
     // cluster deploys); local[N] is only the standalone fallback

@@ -1,5 +1,7 @@
 package graft
 
+import graft.ingest.WikidataIngest
+
 /** Dev tool: time one gated query end-to-end and dump its plan.
   *
   * Usage: runMain graft.PlanDump <queryName> [sfDir] [reps]
@@ -24,8 +26,8 @@ object PlanDump {
         val t0 = System.nanoTime()
         val ast = graft.sparql.Parser.parse(text)
         val t1 = System.nanoTime()
-        val st = graft.ingest.WikidataIngest.statements(spark, "/root/repo/data/wikidata")
-        val lb = graft.ingest.WikidataIngest.labels(spark, "/root/repo/data/wikidata")
+        val st = WikidataIngest.statements(spark, WikidataIngest.defaultDir)
+        val lb = WikidataIngest.labels(spark, WikidataIngest.defaultDir)
         val df = new graft.sparql.Translator(spark, st, lb).translate(ast)
         val t2 = System.nanoTime()
         df.write.format("noop").mode("overwrite").save()

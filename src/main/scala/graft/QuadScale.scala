@@ -333,7 +333,7 @@ object QuadScale {
     val targets = args.lift(0).getOrElse("1000000,8000000")
       .split(",").map(_.trim.toLong).toSeq
     val baseDir = args.lift(1).getOrElse(
-      java.nio.file.Files.createTempDirectory("graft-quadscale").toString)
+      Workspace.scratch("graft-quadscale"))
     val modes = args.lift(2).getOrElse("uniform").split(",").map(_.trim).toSeq
     modes.foreach(m => require(m == "uniform" || m == "skew" || m == "pressure",
       s"unknown mode $m"))
@@ -367,10 +367,7 @@ object QuadScale {
       if (idxDone && !warm) {
         System.err.println(s"[quadscale $mode] $idx built but append tier " +
           "incomplete: rebuilding from scratch")
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        rm(new java.io.File(idx))
+        Workspace.deleteTree(new java.io.File(idx))
       }
 
       def time[A](name: String)(f: => A): (Double, A) = {

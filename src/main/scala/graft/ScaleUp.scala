@@ -69,7 +69,7 @@ object ScaleUp {
 
   def main(args: Array[String]): Unit = {
     val src = args.lift(0).getOrElse("/root/testdata/sf0.1")
-    val out = args.lift(1).getOrElse("/root/repo/data/sf1-derived")
+    val out = args.lift(1).getOrElse(s"${Workspace.root}/data/sf1-derived")
     val factor = args.lift(2).map(_.toInt).getOrElse(10)
     val skew = args.lift(3).contains("skew")
     val spark = GraftSession.get()

@@ -17,12 +17,12 @@ import graft.pipeline.{Dedup, Sampling}
   * harness exercises.
   *
   * Usage: `runMain graft.SkewBench [dir]` (default
-  * `/root/repo/data/sf1-skewed`).
+  * `data/sf1-skewed` under the checkout root).
   */
 object SkewBench {
 
   def main(args: Array[String]): Unit = {
-    val dir = args.headOption.getOrElse("/root/repo/data/sf1-skewed")
+    val dir = args.headOption.getOrElse(s"${Workspace.root}/data/sf1-skewed")
     val spark = GraftSession.get()
     val docs = Tables.documents(spark, dir)
     val nDocs = docs.count()

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Query-pack contract (SURVEY.md §7).
   *
   * `queries` aggregates every implemented operator's demo query;
   * `oracleSql` carries the DuckDB-equivalent SQL for the hash-compare

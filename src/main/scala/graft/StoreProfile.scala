@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev tool: per-phase timing of the store-maintenance harness queries
@@ -63,58 +63,14 @@ object StoreProfile {
     spark.stop()
   }
 
-  private def rmRf(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rmRf))
-    f.delete()
-  }
-
-  private def docQuads(spark: SparkSession, sfDir: String, maxDoc: Long,
-                       withLabels: Boolean) = {
-    import graft.model.Term
-    val nulStr = lit(null).cast("string")
-    val nulNum = lit(null).cast("double")
-    def qEnt(e: Column) = Term.struct_(lit(Term.Kind.Q), e.cast("double"),
-      nulStr, nulStr, concat(lit("Q:"), e.cast("long").cast("string")))
-    def strT(v: Column) = Term.struct_(lit(Term.Kind.Str), nulNum, v,
-      nulStr, concat(lit("s:"), v))
-    val e = col("doc_id") + lit(1L)
-    val docs = Tables.documents(spark, sfDir).filter(col("doc_id") < maxDoc)
-    val claims = docs.select(
-      qEnt(e).as("s"),
-      Term.struct_(lit(Term.Kind.P), lit(1.0), nulStr, nulStr,
-        lit("P:1")).as("p"),
-      strT(col("lang")).as("o"),
-      Term.struct_(lit(Term.Kind.NamedEdge), nulNum,
-        concat(lit("D"), col("doc_id").cast("string")), nulStr,
-        concat(lit("NE:D"), col("doc_id").cast("string"))).as("id"),
-      qEnt(e).as("graph"),
-      (col("doc_id") * 2L).as("ord"),
-      col("doc_id").as("__doc"))
-    if (!withLabels) claims
-    else {
-      val labels = docs.select(
-        qEnt(e).as("s"),
-        Term.struct_(lit(Term.Kind.Label), nulNum, lit("en"), nulStr,
-          lit("lab:en")).as("p"),
-        strT(concat(lit("doc "), col("doc_id").cast("string"))).as("o"),
-        Term.struct_(lit(Term.Kind.Edge), nulNum,
-          concat(lit("A"), col("doc_id").cast("string")), nulStr,
-          concat(lit("E:A"), col("doc_id").cast("string"))).as("id"),
-        qEnt(e).as("graph"),
-        (col("doc_id") * 2L + 1L).as("ord"),
-        col("doc_id").as("__doc"))
-      claims.unionByName(labels)
-    }
-  }
-
   private def runP83(spark: SparkSession, sfDir: String,
                      p: PhaseRunner): Unit = {
     import graft.ingest.{IndexMaintenance, WikidataIngest}
-    val quads = docQuads(spark, sfDir, 2000L, withLabels = true)
+    val quads = graft.queries.PipelineQueries.docQuads(
+      Tables.documents(spark, sfDir).filter(col("doc_id") < 2000L), labels = true)
     val base = quads.filter(pmod(col("__doc"), lit(10L)) =!= 0L).drop("__doc")
     val delta = quads.filter(pmod(col("__doc"), lit(10L)) === 0L).drop("__doc")
-    val root = java.nio.file.Files.createTempDirectory("graft-prof")
-      .toFile.getAbsolutePath
+    val root = Workspace.scratch("graft-prof")
     p.run("writeStore")(WikidataIngest.writeStore(spark, base, s"$root/flat"))
     p.run("createIndex")(WikidataIngest.createIndex(spark, s"$root/flat", s"$root/idx"))
     p.run("append")(IndexMaintenance.appendToIndex(spark, s"$root/idx", delta))
@@ -123,17 +79,16 @@ object StoreProfile {
       "SELECT ?lang (COUNT(?s) AS ?n) WHERE { ?s wdt:P1 ?lang } GROUP BY ?lang",
       s"$root/idx"))
     p.run("readback")(df.write.format("noop").mode("overwrite").save())
-    rmRf(new java.io.File(root))
+    Workspace.deleteTree(new java.io.File(root))
   }
 
   private def runP87(spark: SparkSession, sfDir: String,
                      p: PhaseRunner): Unit = {
     import graft.ingest.{IndexMaintenance, WikidataIngest}
     import graft.sparql.Update
-    val quads = docQuads(spark, sfDir, 1000L, withLabels = false).drop("__doc")
     val docs = Tables.documents(spark, sfDir).filter(col("doc_id") < 1000)
-    val root = java.nio.file.Files.createTempDirectory("graft-prof87")
-      .toFile.getAbsolutePath
+    val quads = graft.queries.PipelineQueries.docQuads(docs, labels = false).drop("__doc")
+    val root = Workspace.scratch("graft-prof87")
     p.run("writeStore")(WikidataIngest.writeStore(spark, quads, s"$root/flat"))
     p.run("createIndex")(WikidataIngest.createIndex(spark, s"$root/flat", s"$root/idx"))
     val idx = s"$root/idx"
@@ -150,7 +105,7 @@ object StoreProfile {
     p.run("vacuum")(IndexMaintenance.vacuumIndex(spark, idx))
     val after = p.run("after translate")(graft.sparql.Sparql.rendered(spark, q, idx))
     p.run("after collect")(after.collect().toSet)
-    rmRf(new java.io.File(root))
+    Workspace.deleteTree(new java.io.File(root))
   }
 
   // small indirection so the phase closure can be passed around with

@@ -22,12 +22,10 @@ object Tables {
   // store's read cache). DataFrames are immutable, so sharing the
   // resolved relation never shares results; the testdata tables are
   // static for a session's lifetime.
-  private val readCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    readCache.getOrElseUpdate((spark, s"$dir/$name.parquet"),
-      spark.read.parquet(s"$dir/$name.parquet"))
+    Workspace.memo(("table", spark, s"$dir/$name.parquet")) {
+      spark.read.parquet(s"$dir/$name.parquet")
+    }
 
   def region(s: SparkSession, d: String): DataFrame    = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = load(s, d, "nation")

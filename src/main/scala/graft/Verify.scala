@@ -25,7 +25,7 @@ object Verify {
     sys.env.get("SPARK_GRAFT_STORE_DIR").foreach(d =>
       spark.conf.set("spark.graft.store.dir", d))
     if (args.contains("--partitioned-store")) {
-      val d = "/root/repo/data/wikidata_part"
+      val d = s"${Workspace.root}/data/wikidata_part"
       if (!new java.io.File(s"$d/statements.parquet").exists())
         graft.ingest.WikidataIngest.buildPartitioned(spark, dir = d)
       spark.conf.set("spark.graft.store.dir", d)

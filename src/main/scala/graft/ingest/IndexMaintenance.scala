@@ -460,13 +460,13 @@ object IndexMaintenance {
             (df: org.apache.spark.sql.DataFrame) => Tombstones.filterLabels(spark, dir, df)))
              if new File(s"$dir/$file").exists()) {
           val tmp = new File(s"$dir/$file.tmp")
-          Tombstones.deleteRecursively(tmp)
+          graft.Workspace.deleteTree(tmp)
           val out = filter(spark.read.parquet(s"$dir/$file"))
           val sorted = if (file.startsWith("statements"))
             out.sortWithinPartitions(col("p.key"), col("s.key")) else out
           sorted.write.mode(SaveMode.Overwrite).parquet(tmp.getAbsolutePath)
           val live = new File(s"$dir/$file")
-          Tombstones.deleteRecursively(live)
+          graft.Workspace.deleteTree(live)
           require(tmp.renameTo(live), s"could not swap $tmp into place")
           touched += 1
         }
@@ -556,7 +556,7 @@ object IndexMaintenance {
               .parquet(base.getAbsolutePath)
             for (dead <- present
                  if partFiles(base, s"$bucketCol=$dead") == filesBefore(dead))
-              Tombstones.deleteRecursively(new File(base, s"$bucketCol=$dead"))
+              graft.Workspace.deleteTree(new File(base, s"$bucketCol=$dead"))
             touchedCount.addAndGet(present.size): Unit
           }
         }
@@ -588,7 +588,7 @@ object IndexMaintenance {
               .parquet(labelBase.getAbsolutePath)
             for ((k, l) <- labelParts
                  if partFiles(labelBase, leaf(k, l)) == filesBefore((k, l)))
-              Tombstones.deleteRecursively(new File(labelBase, leaf(k, l)))
+              graft.Workspace.deleteTree(new File(labelBase, leaf(k, l)))
             touchedCount.addAndGet(labelParts.length): Unit
           }
         WikidataIngest.inParallel(spark, copyTasks ++ labelTask)

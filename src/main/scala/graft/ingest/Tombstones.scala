@@ -156,9 +156,9 @@ object Tombstones {
   def replace(spark: SparkSession, store: String, remaining: DataFrame): Unit = {
     val dir = new File(dirOf(store))
     val tmp = new File(dirOf(store) + ".tmp")
-    deleteRecursively(tmp)
+    graft.Workspace.deleteTree(tmp)
     val kept = remaining.localCheckpoint()
-    if (kept.isEmpty) deleteRecursively(dir)
+    if (kept.isEmpty) graft.Workspace.deleteTree(dir)
     else {
       // size the rewrite by the CURRENT table's bytes, never a fixed 1:
       // an un-delete over a huge tombstone set must not funnel the
@@ -166,7 +166,7 @@ object Tombstones {
       val parts = math.max(1L,
         WikidataIngest.dirBytes(dir.getAbsolutePath) / (64L * 1024 * 1024)).toInt
       kept.repartition(parts).write.mode(SaveMode.Overwrite).parquet(tmp.getAbsolutePath)
-      deleteRecursively(dir)
+      graft.Workspace.deleteTree(dir)
       require(tmp.renameTo(dir), s"could not swap ${tmp} into place")
     }
     WikidataIngest.invalidate(store)
@@ -174,12 +174,7 @@ object Tombstones {
 
   /** Drop the tombstone table (vacuum's final step). */
   def clear(store: String): Unit = {
-    deleteRecursively(new File(dirOf(store)))
+    graft.Workspace.deleteTree(new File(dirOf(store)))
     WikidataIngest.invalidate(store)
-  }
-
-  private[ingest] def deleteRecursively(f: File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
-    f.delete()
   }
 }

@@ -21,10 +21,10 @@ import scala.jdk.CollectionConverters._
 object WikidataIngest {
 
   /** Default location of the ingested fixture store inside the repo. */
-  val defaultDir = "/root/repo/data/wikidata"
+  val defaultDir = s"${graft.Workspace.root}/data/wikidata"
 
   /** Default location of the opt-in lexeme fixture store. */
-  val lexemeDir = "/root/repo/data/wikidata-lex"
+  val lexemeDir = s"${graft.Workspace.root}/data/wikidata-lex"
 
   /** Committed ingest fixtures, beside the fixture stores. */
   private val fixturesDir = s"${new java.io.File(defaultDir).getParent}/fixtures"
@@ -209,37 +209,41 @@ object WikidataIngest {
       math.min(floor, math.max(1, (bytes / MinPartitionBytes + 1).toInt)))
 
   /** Run independent write/aggregate actions as concurrent Spark jobs
-    * (guide §2.6: actions are only sequential because the driver calls
-    * them sequentially — submitting independent jobs from a small pool
-    * lets one job's tasks back-fill the executors another's tail
-    * leaves idle, and overlaps the driver-side plan/commit latency
-    * that dominates small stores). Bounded by
-    * `spark.graft.build.writeConcurrency` (default 3 — enough to fill
-    * tails, not so many that concurrent full-store shuffles fight for
-    * executor memory and shuffle disk at scale). Failures propagate:
-    * the first exception aborts the await, exactly like the sequential
-    * loop it replaces — and NO task outlives the call: queued siblings
-    * are cancelled and in-flight ones waited out, so a caller's
-    * `finally` can never restore state a straggler writer still reads.
+    * and return their results in task order (guide §2.6: actions are
+    * only sequential because the driver calls them sequentially —
+    * submitting independent jobs from a small pool lets one job's tasks
+    * back-fill the executors another's tail leaves idle, and overlaps
+    * the driver-side plan/commit latency that dominates small stores).
+    * Bounded by `spark.graft.build.writeConcurrency` (default 3 —
+    * enough to fill tails, not so many that concurrent full-store
+    * shuffles fight for executor memory and shuffle disk at scale).
+    * Failures propagate: the first exception aborts the await, exactly
+    * like the sequential loop it replaces — and NO task outlives the
+    * call: queued siblings are cancelled and in-flight ones waited out,
+    * so a caller's `finally` can never restore state a straggler writer
+    * still reads. If the in-flight ones do not finish within the drain
+    * window, an IllegalStateException says so instead.
     */
-  private[ingest] def inParallel(spark: SparkSession, tasks: Seq[() => Unit]): Unit = {
+  private[graft] def inParallel[A](spark: SparkSession, tasks: Seq[() => A]): Seq[A] = {
     val conc = math.max(1,
       spark.conf.get("spark.graft.build.writeConcurrency", "3").toInt)
-    if (tasks.size <= 1 || conc == 1) { tasks.foreach(_()); return }
+    if (tasks.size <= 1 || conc == 1) return tasks.map(_())
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
       math.min(conc, tasks.size))
     implicit val ec: scala.concurrent.ExecutionContext =
       scala.concurrent.ExecutionContext.fromExecutorService(pool)
     try scala.concurrent.Await.result(
       scala.concurrent.Future.sequence(tasks.map(t => scala.concurrent.Future(t()))),
-      scala.concurrent.duration.Duration.Inf): Unit
+      scala.concurrent.duration.Duration.Inf)
     catch { case e: Throwable =>
       // fail-fast drain: shutdownNow() drops every not-yet-started
       // task from the queue; awaitTermination then blocks until the
       // in-flight ones finish (their Spark writes commit or abort
       // inside this window, never after the caller resumes)
       pool.shutdownNow()
-      pool.awaitTermination(1, java.util.concurrent.TimeUnit.HOURS)
+      if (!pool.awaitTermination(1, java.util.concurrent.TimeUnit.HOURS))
+        throw new IllegalStateException("a concurrent task failed and a " +
+          "sibling writer did not finish within 1 h; it may still be in flight", e)
       throw e
     }
     finally pool.shutdown()
@@ -553,9 +557,9 @@ object WikidataIngest {
   }
 
   // pred-count tables are tiny and read per-query at translate time —
-  // cache per (dir, epoch) so a rebuild/append refreshes them
-  private val predCountCache =
-    scala.collection.concurrent.TrieMap.empty[(String, Long), Option[(Long, Map[String, Long])]]
+  // memoized per (dir, epoch) so a rebuild/append refreshes them
+  private def cachedPredCounts(dir: String): Option[(Long, Map[String, Long])] =
+    graft.Workspace.memo(("pred-counts", dir, storeEpoch(dir)))(parsePredCounts(dir))
 
   private def parsePredCounts(dir: String): Option[(Long, Map[String, Long])] = {
     val f = new java.io.File(s"$dir/pred_counts.json")
@@ -587,8 +591,7 @@ object WikidataIngest {
     * for flat/older stores (ordering falls back to pure boundness).
     */
   def predCounts(dir: String): Option[Map[String, Long]] =
-    predCountCache.getOrElseUpdate((dir, storeEpoch(dir)), parsePredCounts(dir))
-      .map(_._2)
+    cachedPredCounts(dir).map(_._2)
 
   /** Truncation floor of `pred_counts.json`: 0 when the table is
     * complete; otherwise the smallest retained count, i.e. a sound
@@ -597,11 +600,7 @@ object WikidataIngest {
     * the absent-predicate cardinality instead of assuming 0.
     */
   def predCountsFloor(dir: String): Long =
-    predCountCache.getOrElseUpdate((dir, storeEpoch(dir)), parsePredCounts(dir))
-      .map(_._1).getOrElse(0L)
-
-  private val predFanoutCache =
-    scala.collection.concurrent.TrieMap.empty[(String, Long), Option[Map[String, (Long, Long)]]]
+    cachedPredCounts(dir).map(_._1).getOrElse(0L)
 
   /** Per-predicate degree bounds persisted by [[writePredCounts]]:
     * predicate key → (max quads on one subject, max quads on one
@@ -609,7 +608,7 @@ object WikidataIngest {
     * intermediate-join hints (scan-count hints still apply).
     */
   def predFanout(dir: String): Option[Map[String, (Long, Long)]] =
-    predFanoutCache.getOrElseUpdate((dir, storeEpoch(dir)), {
+    graft.Workspace.memo(("pred-fanout", dir, storeEpoch(dir))) {
       val f = new java.io.File(s"$dir/pred_fanout.json")
       if (!f.exists()) None
       else {
@@ -626,7 +625,7 @@ object WikidataIngest {
               flat.getOrElse(s"$k|o", Long.MaxValue))
           }.toMap)
       }
-    })
+    }
 
   // DataFrames are immutable, so the resolved scan relation can be
   // shared across queries in a session — repeated `spark.read.parquet`

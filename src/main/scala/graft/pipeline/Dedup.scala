@@ -101,24 +101,6 @@ object Dedup {
     * buckets, and pairwise Jaccard exactly 1.0 — so all-pairs work can
     * run once per distinct set and expand back to members afterwards.
     */
-  /** Build-and-materialize two INDEPENDENT checkpoint chains as
-    * concurrent Spark jobs (guide §2.6: actions are only sequential
-    * because the driver calls them sequentially). Used where an
-    * operator stages two unrelated inputs; both sides are read-only
-    * materializations, so a failure on one side simply propagates.
-    */
-  private def concurrently[A, B](a: => A, b: => B): (A, B) = {
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutorService(pool)
-    try {
-      val fa = scala.concurrent.Future(a)
-      val fb = scala.concurrent.Future(b)
-      (scala.concurrent.Await.result(fa, scala.concurrent.duration.Duration.Inf),
-        scala.concurrent.Await.result(fb, scala.concurrent.duration.Duration.Inf))
-    } finally pool.shutdown()
-  }
-
   private def keyedShinglePrep(df: DataFrame, textCol: String, idCol: String,
                                shingleN: Int): DataFrame =
     shinglePrep(df, textCol, idCol, shingleN)
@@ -276,15 +258,12 @@ object Dedup {
     // The two per-corpus prep→election chains are independent, so
     // their checkpoint materializations run as concurrent jobs (guide
     // §2.6) instead of four serial job latencies
-    val ((in, gIn), (sn, gSn)) = concurrently({
-      val k = keyedShinglePrep(incoming, textCol, idCol, shingleN)
-        .localCheckpoint(false)
-      (k, electGroups(k).localCheckpoint(false))
-    }, {
-      val k = keyedShinglePrep(seen, textCol, idCol, shingleN)
-        .localCheckpoint(false)
-      (k, electGroups(k).localCheckpoint(false))
-    })
+    val Seq((in, gIn), (sn, gSn)) = graft.ingest.WikidataIngest.inParallel(
+      incoming.sparkSession, Seq(incoming, seen).map { df => () =>
+        val k = keyedShinglePrep(df, textCol, idCol, shingleN)
+          .localCheckpoint(false)
+        (k, electGroups(k).localCheckpoint(false))
+      })
     // no a.id < b.id here: the two corpora are distinct relations (ids
     // may even collide across them), so every incoming×seen collision
     // is a candidate exactly once

@@ -54,11 +54,10 @@ object Pq {
             iters: Int = 8): Codebooks = {
     val key = (corpus.queryExecution.logical.semanticHash(),
       vecCol, idCol, m, ksub, maxTrain, iters)
-    cache.getOrElseUpdate(key, fit(corpus, vecCol, idCol, m, ksub, maxTrain, iters))
+    graft.Workspace.memo(("pq-codebooks", key)) {
+      fit(corpus, vecCol, idCol, m, ksub, maxTrain, iters)
+    }
   }
-
-  private val cache = scala.collection.concurrent.TrieMap
-    .empty[(Int, String, String, Int, Int, Int, Int), Codebooks]
 
   private def fit(corpus: DataFrame, vecCol: String, idCol: String,
                   m: Int, ksub: Int, maxTrain: Int, iters: Int): Codebooks = {

@@ -280,12 +280,10 @@ object Similarity {
     // the corpus plan across re-translations of the same query.
     val key = (corpus.queryExecution.logical.semanticHash(),
       vecCol, idCol, nlist, maxTrain, iters)
-    centroidCache.getOrElseUpdate(key,
-      fitCentroids(corpus, vecCol, idCol, nlist, maxTrain, iters))
+    graft.Workspace.memo(("ivf-centroids", key)) {
+      fitCentroids(corpus, vecCol, idCol, nlist, maxTrain, iters)
+    }
   }
-
-  private val centroidCache =
-    scala.collection.concurrent.TrieMap.empty[(Int, String, String, Int, Int, Int), Array[Array[Double]]]
 
   private def fitCentroids(corpus: DataFrame, vecCol: String, idCol: String,
                            nlist: Int, maxTrain: Int,

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{Tables, Workspace}
 import graft.pipeline.{Bpe, Classifier, Dedup, Incremental, Multimodal, Pq, Retrieval, Sampling, Similarity, Sizing, Sketches, TextAnalysis, Web}
 
 /** CORRECTNESS entries for the LLM-data-pipeline pillars (dedup,
@@ -312,15 +312,15 @@ object PipelineQueries {
         .withColumn("embedding", when(col("vec_id") % 5 === 0,
           reverse(col("embedding"))).otherwise(col("embedding")))
       val newSnap = emb.filter(col("vec_id") % 11 =!= 0)
-      val (inc, full) = incIndexDirs.getOrElseUpdate(d, {
-        val i = java.nio.file.Files.createTempDirectory("graft-ivf-inc").toString
-        val f = java.nio.file.Files.createTempDirectory("graft-ivf-fullrb").toString
+      val (inc, full) = Workspace.memo(("p72-inc-index", d)) {
+        val i = Workspace.scratch("graft-ivf-inc")
+        val f = Workspace.scratch("graft-ivf-fullrb")
         Similarity.buildIvfIndex(oldSnap, "embedding", "vec_id", i, nlist = 8)
         Incremental.incrementalIvfUpdate(oldSnap, newSnap,
           "vec_id", "embedding", i)
         Similarity.buildIvfIndex(newSnap, "embedding", "vec_id", f, nlist = 8)
         (i, f)
-      })
+      }
       Incremental.compareIvfContents(s, inc, full, "vec_id")
     }),
 
@@ -624,12 +624,11 @@ object PipelineQueries {
     "p44_ivf_index" -> ((s, d) => {
       val emb = Tables.embeddings(s, d)
       val probes = emb.filter(col("vec_id") < 50)
-      val dir = ivfIndexDirs.getOrElseUpdate(d, {
-        val scratch = java.nio.file.Files
-          .createTempDirectory("graft-ivf-gate").toString
+      val dir = Workspace.memo(("p44-ivf-index", d)) {
+        val scratch = Workspace.scratch("graft-ivf-gate")
         Similarity.buildIvfIndex(emb, "embedding", "vec_id", scratch, nlist = 16)
         scratch
-      })
+      }
       recallGate(
         Similarity.bruteForceTopK(emb, probes, "embedding", "vec_id", k = 10),
         Similarity.ivfTopKIndexed(probes, dir, "embedding", "vec_id",
@@ -657,13 +656,12 @@ object PipelineQueries {
     "p55_ivfpq_index" -> ((s, d) => {
       val emb = Tables.embeddings(s, d)
       val probes = emb.filter(col("vec_id") < 50)
-      val dir = ivfPqIndexDirs.getOrElseUpdate(d, {
-        val scratch = java.nio.file.Files
-          .createTempDirectory("graft-ivfpq-gate").toString
+      val dir = Workspace.memo(("p55-ivfpq-index", d)) {
+        val scratch = Workspace.scratch("graft-ivfpq-gate")
         Pq.buildIvfPqIndex(emb, "embedding", "vec_id", scratch,
           nlist = 16, m = 8, ksub = 16)
         scratch
-      })
+      }
       recallGate(
         Similarity.bruteForceTopK(emb, probes, "embedding", "vec_id", k = 10),
         Pq.ivfPqTopKIndexed(probes, dir, "embedding", "vec_id",
@@ -679,15 +677,14 @@ object PipelineQueries {
     "p57_ivf_append" -> ((s, d) => {
       val emb = Tables.embeddings(s, d)
       val probes = emb.filter(col("vec_id") < 20)
-      val dir = ivfAppendDirs.getOrElseUpdate(d, {
-        val scratch = java.nio.file.Files
-          .createTempDirectory("graft-ivf-append").toString
+      val dir = Workspace.memo(("p57-ivf-append", d)) {
+        val scratch = Workspace.scratch("graft-ivf-append")
         Similarity.buildIvfIndex(emb, "embedding", "vec_id", scratch, nlist = 16)
         Similarity.appendToIvfIndex(
           probes.select((col("vec_id") + 20000).as("vec_id"), col("embedding")),
           "embedding", "vec_id", scratch)
         scratch
-      })
+      }
       val hits = Similarity.ivfTopKIndexed(probes, dir, "embedding", "vec_id",
           k = 1, nprobe = 4)
         .filter(col("neighbor_id") === col("probe_id") + 20000)
@@ -715,9 +712,10 @@ object PipelineQueries {
           .withColumn("label",
             (size(Classifier.tokens(col("text"))) > 60).cast("double")),
         "doc_id", Seq("train" -> 0.8, "holdout" -> 0.2), salt = "clf")
-      val model = clfModels.getOrElseUpdate(d,
+      val model = Workspace.memo(("p59-classifier", d)) {
         Classifier.trainTextClassifier(
-          split.filter(col("split") === "train"), "text", "label"))
+          split.filter(col("split") === "train"), "text", "label")
+      }
       Classifier.accuracyGate(
         Classifier.score(model, split.filter(col("split") === "holdout"), "text"),
         "label", bound = 0.8)
@@ -745,8 +743,9 @@ object PipelineQueries {
     // never corpus-sized; the transform is a broadcast-matrix map)
     "p61_pca_recall" -> ((s, d) => {
       val emb = Tables.embeddings(s, d)
-      val model = pcaModels.getOrElseUpdate(d,
-        Similarity.trainPca(emb, "embedding", k = 32))
+      val model = Workspace.memo(("p61-pca", d)) {
+        Similarity.trainPca(emb, "embedding", k = 32)
+      }
       val reduced = Similarity.applyPca(model, emb, "embedding", "red")
         .select(col("vec_id"), col("red").as("embedding"))
       recallGate(
@@ -1085,46 +1084,14 @@ object PipelineQueries {
     // the appended rows landed in the right partitions of the pruned
     // access path the query routes through.
     "p83_store_append" -> ((s, d) => {
-      import org.apache.spark.sql.Column
       import graft.ingest.{IndexMaintenance, WikidataIngest}
-      import graft.model.Term
-      val nulStr = lit(null).cast("string")
-      val nulNum = lit(null).cast("double")
-      def qEnt(e: Column) = Term.struct_(lit(Term.Kind.Q), e.cast("double"),
-        nulStr, nulStr, concat(lit("Q:"), e.cast("long").cast("string")))
-      def strT(v: Column) = Term.struct_(lit(Term.Kind.Str), nulNum, v,
-        nulStr, concat(lit("s:"), v))
-      val e = col("doc_id") + lit(1L)
-      val docs = Tables.documents(s, d).filter(col("doc_id") < 2000)
-      val claims = docs.select(
-        qEnt(e).as("s"),
-        Term.struct_(lit(Term.Kind.P), lit(1.0), nulStr, nulStr,
-          lit("P:1")).as("p"),
-        strT(col("lang")).as("o"),
-        Term.struct_(lit(Term.Kind.NamedEdge), nulNum,
-          concat(lit("D"), col("doc_id").cast("string")), nulStr,
-          concat(lit("NE:D"), col("doc_id").cast("string"))).as("id"),
-        qEnt(e).as("graph"),
-        (col("doc_id") * 2L).as("ord"),
-        col("doc_id").as("__doc"))
       // one English label per doc entity, so the labels table (which
       // the append path must also maintain) is populated on both sides
-      val labels = docs.select(
-        qEnt(e).as("s"),
-        Term.struct_(lit(Term.Kind.Label), nulNum, lit("en"), nulStr,
-          lit("lab:en")).as("p"),
-        strT(concat(lit("doc "), col("doc_id").cast("string"))).as("o"),
-        Term.struct_(lit(Term.Kind.Edge), nulNum,
-          concat(lit("A"), col("doc_id").cast("string")), nulStr,
-          concat(lit("E:A"), col("doc_id").cast("string"))).as("id"),
-        qEnt(e).as("graph"),
-        (col("doc_id") * 2L + 1L).as("ord"),
-        col("doc_id").as("__doc"))
-      val quads = claims.unionByName(labels)
+      val quads = docQuads(Tables.documents(s, d).filter(col("doc_id") < 2000),
+        labels = true)
       val base = quads.filter(pmod(col("__doc"), lit(10L)) =!= 0L).drop("__doc")
       val delta = quads.filter(pmod(col("__doc"), lit(10L)) === 0L).drop("__doc")
-      val root = java.nio.file.Files.createTempDirectory("graft-p83")
-        .toFile.getAbsolutePath
+      val root = Workspace.scratch("graft-p83")
       WikidataIngest.writeStore(s, base, s"$root/flat")
       WikidataIngest.createIndex(s, s"$root/flat", s"$root/idx")
       IndexMaintenance.appendToIndex(s, s"$root/idx", delta)
@@ -1145,29 +1112,10 @@ object PipelineQueries {
     // marker is what stands between a torn append and silently
     // inconsistent pruned access paths.
     "p85_store_repair_check" -> ((s, d) => {
-      import org.apache.spark.sql.Column
       import graft.ingest.{IndexMaintenance, WikidataIngest}
-      import graft.model.Term
-      val nulStr = lit(null).cast("string")
-      val nulNum = lit(null).cast("double")
-      def qEnt(e: Column) = Term.struct_(lit(Term.Kind.Q), e.cast("double"),
-        nulStr, nulStr, concat(lit("Q:"), e.cast("long").cast("string")))
-      def strT(v: Column) = Term.struct_(lit(Term.Kind.Str), nulNum, v,
-        nulStr, concat(lit("s:"), v))
-      val e = col("doc_id") + lit(1L)
-      val quads = Tables.documents(s, d).filter(col("doc_id") < 200)
-        .select(
-          qEnt(e).as("s"),
-          Term.struct_(lit(Term.Kind.P), lit(1.0), nulStr, nulStr,
-            lit("P:1")).as("p"),
-          strT(col("lang")).as("o"),
-          Term.struct_(lit(Term.Kind.NamedEdge), nulNum,
-            concat(lit("D"), col("doc_id").cast("string")), nulStr,
-            concat(lit("NE:D"), col("doc_id").cast("string"))).as("id"),
-          qEnt(e).as("graph"),
-          col("doc_id").as("ord"))
-      val root = java.nio.file.Files.createTempDirectory("graft-p85")
-        .toFile.getAbsolutePath
+      val quads = docQuads(Tables.documents(s, d).filter(col("doc_id") < 200),
+        labels = false).drop("__doc")
+      val root = Workspace.scratch("graft-p85")
       WikidataIngest.writeStore(s, quads, s"$root/flat")
       WikidataIngest.createIndex(s, s"$root/flat", s"$root/idx")
       // tear the store: 10 duplicate rows appended to the MAIN copy
@@ -1203,30 +1151,11 @@ object PipelineQueries {
     // AFTER the vacuum (asserted engine-side; a mismatch on any of the
     // four permutations' routes breaks the hash)
     "p87_sparql_update" -> ((s, d) => {
-      import org.apache.spark.sql.Column
       import graft.ingest.{IndexMaintenance, WikidataIngest}
-      import graft.model.Term
       import graft.sparql.Update
-      val nulStr = lit(null).cast("string")
-      val nulNum = lit(null).cast("double")
-      def qEnt(e: Column) = Term.struct_(lit(Term.Kind.Q), e.cast("double"),
-        nulStr, nulStr, concat(lit("Q:"), e.cast("long").cast("string")))
-      def strT(v: Column) = Term.struct_(lit(Term.Kind.Str), nulNum, v,
-        nulStr, concat(lit("s:"), v))
-      val e = col("doc_id") + lit(1L)
       val docs = Tables.documents(s, d).filter(col("doc_id") < 1000)
-      val quads = docs.select(
-        qEnt(e).as("s"),
-        Term.struct_(lit(Term.Kind.P), lit(1.0), nulStr, nulStr,
-          lit("P:1")).as("p"),
-        strT(col("lang")).as("o"),
-        Term.struct_(lit(Term.Kind.NamedEdge), nulNum,
-          concat(lit("D"), col("doc_id").cast("string")), nulStr,
-          concat(lit("NE:D"), col("doc_id").cast("string"))).as("id"),
-        qEnt(e).as("graph"),
-        col("doc_id").as("ord"))
-      val root = java.nio.file.Files.createTempDirectory("graft-p87")
-        .toFile.getAbsolutePath
+      val quads = docQuads(docs, labels = false).drop("__doc")
+      val root = Workspace.scratch("graft-p87")
       WikidataIngest.writeStore(s, quads, s"$root/flat")
       WikidataIngest.createIndex(s, s"$root/flat", s"$root/idx")
       val idx = s"$root/idx"
@@ -1279,13 +1208,8 @@ object PipelineQueries {
       val queries = docs.filter(col("doc_id") < 3)
         .select(col("doc_id").as("query_id"),
           array_join(slice(Retrieval.tokens(col("text")), 1, 8), " ").as("qtext"))
-      val dir = textIndexDirs.getOrElseUpdate(d, {
-        val scratch = java.nio.file.Files
-          .createTempDirectory("graft-textidx-gate").toString
-        Retrieval.buildTextIndex(docs, "text", "doc_id", scratch, buckets = 16)
-        scratch
-      })
-      Retrieval.bm25TopKIndexed(queries, dir, "qtext", "query_id", k = 10)
+      Retrieval.bm25TopKIndexed(queries, textIndexFor(docs, d),
+        "qtext", "query_id", k = 10)
     }),
 
     // fuzzy decontamination triage: BM25 against the same benchmark
@@ -1311,14 +1235,8 @@ object PipelineQueries {
       val bench = docs.filter(col("doc_id") < 3)
         .select(col("doc_id").as("query_id"),
           array_join(slice(Retrieval.tokens(col("text")), 1, 8), " ").as("qtext"))
-      val dir = textIndexDirs.getOrElseUpdate(d, {
-        val scratch = java.nio.file.Files
-          .createTempDirectory("graft-textidx-gate").toString
-        Retrieval.buildTextIndex(docs, "text", "doc_id", scratch, buckets = 16)
-        scratch
-      })
       Retrieval.decontaminationTriageIndexed(docs, "text", "doc_id",
-        bench, "qtext", "query_id", dir, minScore = 1.0, k = 10)
+        bench, "qtext", "query_id", textIndexFor(docs, d), minScore = 1.0, k = 10)
     }),
 
     // split-leakage audit: near-dup pairs straddling the p15 split
@@ -1385,15 +1303,56 @@ object PipelineQueries {
     * single pass/fail row (the oracle is the constant "pass" row). A
     * left join from the exact pairs counts hits; no collect.
     */
-  /** One persisted IVF build per (JVM, dataset) for the p44 gate. */
-  private val ivfIndexDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  /** One persisted inverted-text-index build per (JVM, dataset) for
-    * the p65 gate.
+  /** Synthetic doc-entity quads for the store-maintenance gates (p83,
+    * p85, p87) and StoreProfile: per doc, `Q(doc_id+1) P1 "<lang>"` in
+    * the entity's own graph with `ord` = doc_id; with `labels`, also one
+    * English label per entity (claims then take even ords, labels odd).
+    * `__doc` carries doc_id for delta splits.
     */
-  private val textIndexDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
+  private[graft] def docQuads(docs: DataFrame, labels: Boolean): DataFrame = {
+    import org.apache.spark.sql.Column
+    import graft.model.Term
+    val nulStr = lit(null).cast("string")
+    val nulNum = lit(null).cast("double")
+    val e = col("doc_id") + lit(1L)
+    val ent = Term.struct_(lit(Term.Kind.Q), e.cast("double"),
+      nulStr, nulStr, concat(lit("Q:"), e.cast("long").cast("string")))
+    def strT(v: Column) = Term.struct_(lit(Term.Kind.Str), nulNum, v,
+      nulStr, concat(lit("s:"), v))
+    val claims = docs.select(
+      ent.as("s"),
+      Term.struct_(lit(Term.Kind.P), lit(1.0), nulStr, nulStr,
+        lit("P:1")).as("p"),
+      strT(col("lang")).as("o"),
+      Term.struct_(lit(Term.Kind.NamedEdge), nulNum,
+        concat(lit("D"), col("doc_id").cast("string")), nulStr,
+        concat(lit("NE:D"), col("doc_id").cast("string"))).as("id"),
+      ent.as("graph"),
+      (if (labels) col("doc_id") * 2L else col("doc_id")).as("ord"),
+      col("doc_id").as("__doc"))
+    if (!labels) claims
+    else claims.unionByName(docs.select(
+      ent.as("s"),
+      Term.struct_(lit(Term.Kind.Label), nulNum, lit("en"), nulStr,
+        lit("lab:en")).as("p"),
+      strT(concat(lit("doc "), col("doc_id").cast("string"))).as("o"),
+      Term.struct_(lit(Term.Kind.Edge), nulNum,
+        concat(lit("A"), col("doc_id").cast("string")), nulStr,
+        concat(lit("E:A"), col("doc_id").cast("string"))).as("id"),
+      ent.as("graph"),
+      (col("doc_id") * 2L + 1L).as("ord"),
+      col("doc_id").as("__doc")))
+  }
+
+  /** One persisted inverted-text-index build per (JVM, dataset),
+    * shared by the p65 and p75 gates.
+    */
+  private def textIndexFor(docs: DataFrame, d: String): String =
+    Workspace.memo(("p65-text-index", d)) {
+      val scratch = Workspace.scratch("graft-textidx-gate")
+      Retrieval.buildTextIndex(docs, "text", "doc_id", scratch, buckets = 16)
+      scratch
+    }
 
   /** One corpus tokenize-and-count per (session, dataset), shared by
     * the direct BM25 (p63) and direct triage (p73) gates — the
@@ -1402,34 +1361,12 @@ object PipelineQueries {
     * corpus snapshot pay ONE corpus pass. Lazy `localCheckpoint`:
     * materialized by whichever entry runs first, reused by the next.
     */
-  private val sharedPostings = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (DataFrame, DataFrame)]
   private def postingsFor(s: SparkSession, d: String): (DataFrame, DataFrame) =
-    sharedPostings.getOrElseUpdate((s, d), {
+    Workspace.memo(("p63-postings", s, d)) {
       val (post, stats) =
         Retrieval.corpusPostings(Tables.documents(s, d), "text", "doc_id")
       (post.localCheckpoint(false), stats.localCheckpoint(false))
-    })
-
-  /** One persisted IVF-PQ build per (JVM, dataset) for the p55 gate. */
-  private val ivfPqIndexDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  /** One build+append per (JVM, dataset) for the p57 gate. */
-  private val ivfAppendDirs =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
-  /** One incremental-vs-full index pair per (JVM, dataset) for p72. */
-  private val incIndexDirs =
-    scala.collection.concurrent.TrieMap.empty[String, (String, String)]
-
-  /** One classifier fit per (JVM, dataset) for the p59 gate. */
-  private val clfModels = scala.collection.concurrent.TrieMap
-    .empty[String, org.apache.spark.ml.classification.LogisticRegressionModel]
-
-  /** One PCA fit per (JVM, dataset) for the p61 gate. */
-  private val pcaModels = scala.collection.concurrent.TrieMap
-    .empty[String, org.apache.spark.ml.feature.PCAModel]
+    }
 
   private def recallGate(exact: DataFrame, approx: DataFrame, bound: Double): DataFrame =
     exact.select(col("probe_id"), col("neighbor_id"))
@@ -1530,6 +1467,10 @@ object PipelineQueries {
        |  FROM cand JOIN p pp ON pp.vec_id = cand.probe_id
        |            JOIN c cc ON cc.vec_id = cand.neighbor_id) t
        |WHERE rnk <= $k""".stripMargin
+
+  // the committed fixture store the graph entries (p69-p78) read
+  private val StoreQuads = "read_parquet('" +
+    s"${graft.ingest.WikidataIngest.defaultDir}/statements.parquet/*.parquet')"
 
   val oracles: Map[String, String] = Map(
     "p01_exact_dedup" ->
@@ -1768,9 +1709,9 @@ object PipelineQueries {
     // directions), component = min reachable id — the same canonical
     // label GraphX's ConnectedComponents converges to
     "p69_graph_components" ->
-      """WITH RECURSIVE e0 AS (
+      s"""WITH RECURSIVE e0 AS (
         |  SELECT CAST(s['num'] AS BIGINT) AS a, CAST(o['num'] AS BIGINT) AS b
-        |  FROM read_parquet('/root/repo/data/wikidata/statements.parquet/*.parquet')
+        |  FROM $StoreQuads
         |  WHERE s['kind']='Q' AND o['kind']='Q'),
         |ed AS (SELECT a, b FROM e0 UNION SELECT b, a FROM e0),
         |reach(v, u) AS (
@@ -1780,9 +1721,9 @@ object PipelineQueries {
         |SELECT v AS entity_id, min(u) AS component FROM reach GROUP BY v""".stripMargin,
 
     "p70_graph_degrees" ->
-      """WITH e AS (
+      s"""WITH e AS (
         |  SELECT CAST(s['num'] AS BIGINT) AS a, CAST(o['num'] AS BIGINT) AS b
-        |  FROM read_parquet('/root/repo/data/wikidata/statements.parquet/*.parquet')
+        |  FROM $StoreQuads
         |  WHERE s['kind']='Q' AND o['kind']='Q'),
         |od AS (SELECT a AS entity_id, count(*) AS out_degree FROM e GROUP BY a),
         |id_ AS (SELECT b AS entity_id, count(*) AS in_degree FROM e GROUP BY b)
@@ -1794,9 +1735,9 @@ object PipelineQueries {
     // min over the directed MUTUAL reachability closure: u and v share
     // an SCC iff each reaches the other; (v,v) seeds make singletons
     "p78_graph_scc" ->
-      """WITH RECURSIVE e0 AS (
+      s"""WITH RECURSIVE e0 AS (
         |  SELECT CAST(s['num'] AS BIGINT) AS a, CAST(o['num'] AS BIGINT) AS b
-        |  FROM read_parquet('/root/repo/data/wikidata/statements.parquet/*.parquet')
+        |  FROM $StoreQuads
         |  WHERE s['kind']='Q' AND o['kind']='Q'),
         |vv AS (SELECT DISTINCT x AS v FROM
         |  (SELECT a AS x FROM e0 UNION ALL SELECT b FROM e0)),
@@ -1811,9 +1752,9 @@ object PipelineQueries {
     // every a<b<c triangle of the deduplicated undirected edge list
     // materialized once; per-vertex count = memberships, 0-filled
     "p76_graph_triangles" ->
-      """WITH e0 AS (
+      s"""WITH e0 AS (
         |  SELECT CAST(s['num'] AS BIGINT) AS a, CAST(o['num'] AS BIGINT) AS b
-        |  FROM read_parquet('/root/repo/data/wikidata/statements.parquet/*.parquet')
+        |  FROM $StoreQuads
         |  WHERE s['kind']='Q' AND o['kind']='Q'),
         |ed AS (SELECT DISTINCT least(a, b) AS x, greatest(a, b) AS y
         |       FROM e0 WHERE a <> b),
@@ -1830,9 +1771,9 @@ object PipelineQueries {
 
     // bounded directed reachability closure from entity 31; min depth
     "p77_graph_hops" ->
-      """WITH RECURSIVE e0 AS (
+      s"""WITH RECURSIVE e0 AS (
         |  SELECT CAST(s['num'] AS BIGINT) AS a, CAST(o['num'] AS BIGINT) AS b
-        |  FROM read_parquet('/root/repo/data/wikidata/statements.parquet/*.parquet')
+        |  FROM $StoreQuads
         |  WHERE s['kind']='Q' AND o['kind']='Q'),
         |r(v, d) AS (
         |  SELECT CAST(31 AS BIGINT), 0
@@ -1845,9 +1786,9 @@ object PipelineQueries {
     // 0.85·Σ_{u→v} r_i(u)/outdeg(u) over the raw edge MULTISET
     // (parallel edges each carry a message); 5 iterations, 6-dp round
     "p74_graph_pagerank" ->
-      """WITH e AS (
+      s"""WITH e AS (
         |  SELECT CAST(s['num'] AS BIGINT) AS a, CAST(o['num'] AS BIGINT) AS b
-        |  FROM read_parquet('/root/repo/data/wikidata/statements.parquet/*.parquet')
+        |  FROM $StoreQuads
         |  WHERE s['kind']='Q' AND o['kind']='Q'),
         |od AS (SELECT a, CAST(count(*) AS DOUBLE) AS od FROM e GROUP BY a),
         |v AS (SELECT DISTINCT x AS v FROM

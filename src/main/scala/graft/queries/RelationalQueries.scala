@@ -23,40 +23,24 @@ object RelationalQueries {
   /** exact decimal sum rendered as double — order-independent. */
   private def dsum(c: Column): Column = sum(dec(c)).cast("double")
 
-  /** One bucketed layout per (JVM, dataset) for the q39 co-located
+  /** One bucketed layout per (session, dataset) for the q39 co-located
     * join: lineitem and orders written once into matching hash buckets
     * on the order key (the same pay-at-write-time pattern as the p44
-    * IVF index and the SPARQL store's predicate buckets).
+    * IVF index and the SPARQL store's predicate buckets). Keyed by
+    * session because a recreated session has a fresh catalog: the
+    * layout files may survive but the table registrations do not.
     */
-  private val bucketedDirs =
-    scala.collection.concurrent.TrieMap.empty[String, (String, String)]
-  private val bucketedLock = new Object
-  // the whole check-and-build is one critical section: concurrent q39
-  // calls must not race overlapping saveAsTable overwrites on the same
-  // table names (builds are once-per-dataset, so contention is nil)
   private def bucketedOrderTables(s: SparkSession, d: String): (String, String) =
-    bucketedLock.synchronized {
-    val cached = bucketedDirs.get(d).filter { case (lt, ot) =>
-      // a recreated session has a fresh in-memory catalog: the layout
-      // files may survive on disk but the table registration does not,
-      // so rebuild rather than hand back a dangling name — and BOTH
-      // tables must exist (orders' build could have failed after
-      // lineitem's succeeded)
-      s.catalog.tableExists(lt) && s.catalog.tableExists(ot)
-    }
-    cached.getOrElse {
+    graft.Workspace.memo(("q39-bucketed", s, d)) {
       val tag = java.lang.Integer.toHexString(d.hashCode)
-      val base = java.nio.file.Files
-        .createTempDirectory("graft-bucketed").toString
+      val base = graft.Workspace.scratch("graft-bucketed")
       val (lt, ot) = (s"graft_bkt_lineitem_$tag", s"graft_bkt_orders_$tag")
       graft.operators.Bucketing.writeBucketed(
         Tables.lineitem(s, d), lt, "l_orderkey", s"$base/lineitem")
       graft.operators.Bucketing.writeBucketed(
         Tables.orders(s, d), ot, "o_orderkey", s"$base/orders")
-      bucketedDirs(d) = (lt, ot)
       (lt, ot)
     }
-  }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // -- aggregation over one table (TPC-H Q1 shape): partial aggs

@@ -16,8 +16,8 @@ import graft.sparql.Sparql
   */
 object SparqlQueries {
 
-  private val ST = "read_parquet('/root/repo/data/wikidata/statements.parquet/*.parquet')"
-  private val LB = "read_parquet('/root/repo/data/wikidata/labels.parquet/*.parquet')"
+  private val ST = s"read_parquet('${graft.ingest.WikidataIngest.defaultDir}/statements.parquet/*.parquet')"
+  private val LB = s"read_parquet('${graft.ingest.WikidataIngest.defaultDir}/labels.parquet/*.parquet')"
 
   /** The sp pack runs against the flat fixture store by default; set
     * `spark.graft.store.dir` to point it at another layout (Verify's

@@ -60,8 +60,11 @@ import Ast._
   * snapshot-consistent against APPENDS (a planned scan holds its file
   * listing), but the tombstone-table SWAP in the un-delete path — like
   * vacuum and create-index — can fail a query planned before the swap
-  * with a missing-file error; such queries retry. Same live-rebuild
-  * contract the store has always had.
+  * with a missing-file error. Nothing retries it: the action over the
+  * query's DataFrame throws, and HTTP `/query` answers 500
+  * (`error: …`) or, if a streamed response has already started, ends
+  * the body with the abort marker. The caller re-issues the query.
+  * Same live-rebuild contract the store has always had.
   */
 object Update {
 

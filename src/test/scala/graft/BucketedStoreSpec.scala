@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import graft.ingest.WikidataIngest
 import graft.sparql.Sparql
 
@@ -12,13 +10,13 @@ import graft.sparql.Sparql
 class BucketedStoreSpec extends SparkTestBase {
 
   private lazy val flatDir = {
-    val d = "/root/repo/data/wikidata"
+    val d = WikidataIngest.defaultDir
     WikidataIngest.statements(spark, d)
     d
   }
 
   private lazy val partDir = {
-    val d = Files.createTempDirectory("graft-part").toFile.getAbsolutePath
+    val d = Workspace.scratch("graft-part")
     WikidataIngest.buildPartitioned(spark, WikidataIngest.fixturePath, d)
     d
   }
@@ -127,7 +125,7 @@ class BucketedStoreSpec extends SparkTestBase {
     // the writer persists its bucket count in meta.json and the reader
     // buckets with it — a drifted count would silently return empty
     // bound-subject/object scans (round-4 ADVICE)
-    val d = Files.createTempDirectory("graft-part16").toFile.getAbsolutePath
+    val d = Workspace.scratch("graft-part16")
     WikidataIngest.buildPartitioned(spark, WikidataIngest.fixturePath, d, buckets = 16)
     assert(WikidataIngest.storeBuckets(d) === Some(16))
     val queries = Seq(

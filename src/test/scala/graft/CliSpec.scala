@@ -9,7 +9,7 @@ import java.io.{BufferedReader, ByteArrayOutputStream, PrintStream, StringReader
 class CliSpec extends SparkTestBase {
 
   test("REPL runs two consecutive queries, survives a parse error, stops at exit") {
-    val dir = "/root/repo/data/wikidata"
+    val dir = graft.ingest.WikidataIngest.defaultDir
     graft.ingest.WikidataIngest.statements(spark, dir) // builds if absent
     val input = new BufferedReader(new StringReader(
       """SELECT ?p
@@ -33,7 +33,7 @@ class CliSpec extends SparkTestBase {
   }
 
   test("REPL ends cleanly at EOF with no trailing query") {
-    val dir = "/root/repo/data/wikidata"
+    val dir = graft.ingest.WikidataIngest.defaultDir
     val input = new BufferedReader(new StringReader("ASK { wd:Q31 ?p ?o }\n"))
     val outBuf = new ByteArrayOutputStream()
     // EOF arrives mid-query: the buffered text still executes once

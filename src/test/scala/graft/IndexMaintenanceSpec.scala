@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -16,9 +14,6 @@ import graft.sparql.Sparql
   */
 class IndexMaintenanceSpec extends SparkTestBase {
 
-  private def tmp(prefix: String): String =
-    Files.createTempDirectory(prefix).toFile.getAbsolutePath
-
   // fixture quads split by document: the LAST dump line's graph is the
   // delta (its ords are already past the base's, so the append-path
   // ord offset reproduces full-ingest insertion order exactly)
@@ -31,16 +26,16 @@ class IndexMaintenanceSpec extends SparkTestBase {
 
   // full rebuild over everything: the reference store to equal
   private lazy val fullIdx: String = {
-    val flat = tmp("graft-im-flatfull")
-    val idx = tmp("graft-im-idxfull")
+    val flat = Workspace.scratch("graft-im-flatfull")
+    val idx = Workspace.scratch("graft-im-idxfull")
     WikidataIngest.writeStore(spark, all, flat)
     WikidataIngest.createIndex(spark, flat, idx)
     idx
   }
 
   private def buildBaseIdx(): String = {
-    val flat = tmp("graft-im-flatbase")
-    val idx = tmp("graft-im-idxbase")
+    val flat = Workspace.scratch("graft-im-flatbase")
+    val idx = Workspace.scratch("graft-im-idxbase")
     WikidataIngest.writeStore(spark, base, flat)
     WikidataIngest.createIndex(spark, flat, idx)
     idx

@@ -6,11 +6,8 @@ package graft
   */
 class MainSpec extends SparkTestBase {
 
-  private def tmp(): String =
-    java.nio.file.Files.createTempDirectory("graft-main").toFile.getAbsolutePath
-
   test("create-db plumbs --lang and --no-qualifiers through to the parser") {
-    val full = tmp(); val filtered = tmp()
+    val full = Workspace.scratch("graft-main"); val filtered = Workspace.scratch("graft-main")
     assert(Main.run(Array("create-db", ingest.WikidataIngest.fixturePath, full)) === 0)
     val nFull = spark.read.parquet(s"$full/statements.parquet").count()
     assert(nFull === 3385L)
@@ -26,7 +23,7 @@ class MainSpec extends SparkTestBase {
   }
 
   test("create-index builds the partitioned layout from a flat store") {
-    val flat = tmp(); val indexed = tmp()
+    val flat = Workspace.scratch("graft-main"); val indexed = Workspace.scratch("graft-main")
     assert(Main.run(Array("create-db", ingest.WikidataIngest.fixturePath, flat)) === 0)
     assert(Main.run(Array("create-index", flat, indexed, "--buckets=8")) === 0)
     assert(ingest.WikidataIngest.storeBuckets(indexed) === Some(8))
@@ -53,7 +50,7 @@ class MainSpec extends SparkTestBase {
 
   test("create-index --zorder lays the main copy out in Morton order, results unchanged") {
     import org.apache.spark.sql.functions._
-    val flat = tmp(); val indexed = tmp()
+    val flat = Workspace.scratch("graft-main"); val indexed = Workspace.scratch("graft-main")
     assert(Main.run(Array("create-db", ingest.WikidataIngest.fixturePath, flat)) === 0)
     assert(Main.run(Array("create-index", flat, indexed,
       "--buckets=8", "--zorder=s.num,o.num")) === 0)

@@ -349,7 +349,7 @@ class PipelineSpec extends SparkTestBase {
   }
 
   test("IVF-PQ persisted index round-trips and searches with usable recall") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivfpq").toString
+    val dir = Workspace.scratch("graft-ivfpq")
     Pq.buildIvfPqIndex(emb, "embedding", "vec_id", dir, nlist = 8, m = 8, ksub = 16)
     // stored layout: codes only (plus the v3 generation stamp), no
     // float vectors at rest
@@ -392,7 +392,7 @@ class PipelineSpec extends SparkTestBase {
   }
 
   test("IVF append assigns with stored centroids and searches appended twins") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivf-app").toString
+    val dir = Workspace.scratch("graft-ivf-app")
     val base = emb.filter(col("vec_id") >= 10)
     Similarity.buildIvfIndex(base, "embedding", "vec_id", dir, nlist = 8)
     val centsBefore = spark.read.parquet(s"$dir/centroids").collect()
@@ -414,7 +414,7 @@ class PipelineSpec extends SparkTestBase {
   }
 
   test("IVF compaction shrinks fragmented cells; rows and search results unchanged") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivf-compact").toString
+    val dir = Workspace.scratch("graft-ivf-compact")
     Similarity.buildIvfIndex(emb.filter(col("vec_id") >= 100),
       "embedding", "vec_id", dir, nlist = 4)
     // 10 small appends fragment every cell well past the threshold
@@ -452,7 +452,7 @@ class PipelineSpec extends SparkTestBase {
   }
 
   test("tombstones hide ids from indexed search; a same-gen append re-adds them") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivf-tomb").toString
+    val dir = Workspace.scratch("graft-ivf-tomb")
     Similarity.buildIvfIndex(emb, "embedding", "vec_id", dir, nlist = 4)
     val probe = emb.filter(col("vec_id") === 0)
       .select((col("vec_id") + 900).as("vec_id"), col("embedding"))
@@ -475,8 +475,8 @@ class PipelineSpec extends SparkTestBase {
       .withColumn("embedding", when(col("vec_id") % 5 === 0,
         reverse(col("embedding"))).otherwise(col("embedding")))
     val newSnap = emb.filter(col("vec_id") % 11 =!= 0)
-    val inc = java.nio.file.Files.createTempDirectory("graft-inc").toString
-    val full = java.nio.file.Files.createTempDirectory("graft-fullrb").toString
+    val inc = Workspace.scratch("graft-inc")
+    val full = Workspace.scratch("graft-fullrb")
     Similarity.buildIvfIndex(oldSnap, "embedding", "vec_id", inc, nlist = 4)
     val acted = Incremental.incrementalIvfUpdate(oldSnap, newSnap,
       "vec_id", "embedding", inc)
@@ -503,14 +503,14 @@ class PipelineSpec extends SparkTestBase {
     // shadow guard NPE'd instead of passing)
     val a = emb.filter(col("vec_id") < 200)
     val b = emb.filter(col("vec_id") < 260) // pure additions
-    val inc = java.nio.file.Files.createTempDirectory("graft-inc3").toString
+    val inc = Workspace.scratch("graft-inc3")
     Similarity.buildIvfIndex(a, "embedding", "vec_id", inc, nlist = 4)
     val d = Incremental.incrementalIvfUpdate(a, b, "vec_id", "embedding", inc)
     assert(d.collect().forall(_.getString(1) == "added"))
     // next increment (also adds-only) goes through the guarded append
     val c = emb.filter(col("vec_id") < 300)
     Incremental.incrementalIvfUpdate(b, c, "vec_id", "embedding", inc)
-    val full = java.nio.file.Files.createTempDirectory("graft-full3").toString
+    val full = Workspace.scratch("graft-full3")
     Similarity.buildIvfIndex(c, "embedding", "vec_id", full, nlist = 4)
     val row = Incremental.compareIvfContents(spark, inc, full, "vec_id").collect()(0)
     assert(row.getLong(0) === 300L && row.getLong(1) === 300L && row.getBoolean(2))
@@ -524,8 +524,8 @@ class PipelineSpec extends SparkTestBase {
       .withColumn("embedding", when(col("vec_id") % 5 === 0,
         reverse(col("embedding"))).otherwise(col("embedding")))
     val c = emb.filter(col("vec_id") % 3 =!= 0 && col("vec_id") < 400)
-    val inc = java.nio.file.Files.createTempDirectory("graft-inc2").toString
-    val full = java.nio.file.Files.createTempDirectory("graft-full2").toString
+    val inc = Workspace.scratch("graft-inc2")
+    val full = Workspace.scratch("graft-full2")
     Similarity.buildIvfIndex(a, "embedding", "vec_id", inc, nlist = 4)
     Incremental.incrementalIvfUpdate(a, b, "vec_id", "embedding", inc)
     Incremental.incrementalIvfUpdate(b, c, "vec_id", "embedding", inc)
@@ -538,7 +538,7 @@ class PipelineSpec extends SparkTestBase {
   }
 
   test("default-gen append into a tombstoned index fails loudly, never silently") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivf-shadow").toString
+    val dir = Workspace.scratch("graft-ivf-shadow")
     Similarity.buildIvfIndex(emb, "embedding", "vec_id", dir, nlist = 4)
     Similarity.tombstoneIvfIds(
       emb.filter(col("vec_id") < 2).select("vec_id"), "vec_id", dir, gen = 3L)
@@ -551,7 +551,7 @@ class PipelineSpec extends SparkTestBase {
   }
 
   test("IVF-PQ search honors tombstones like the IVF index") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivfpq-tomb").toString
+    val dir = Workspace.scratch("graft-ivfpq-tomb")
     Pq.buildIvfPqIndex(emb, "embedding", "vec_id", dir, nlist = 4, m = 8, ksub = 16)
     val probe = emb.filter(col("vec_id") === 0)
       .select((col("vec_id") + 900).as("vec_id"), col("embedding"))
@@ -565,7 +565,7 @@ class PipelineSpec extends SparkTestBase {
   }
 
   test("IVF-PQ append into a tombstoned index: default gen fails loudly; safe gen lands live") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivfpq-shadow").toString
+    val dir = Workspace.scratch("graft-ivfpq-shadow")
     Pq.buildIvfPqIndex(emb.filter(col("vec_id") >= 10),
       "embedding", "vec_id", dir, nlist = 4, m = 8, ksub = 16)
     Similarity.tombstoneIvfIds(
@@ -591,7 +591,7 @@ class PipelineSpec extends SparkTestBase {
   }
 
   test("compactIvfIndex on a missing index names the expected layout") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivf-miss").toString
+    val dir = Workspace.scratch("graft-ivf-miss")
     val e = intercept[IllegalArgumentException] {
       Similarity.compactIvfIndex(spark, s"$dir/nope")
     }
@@ -603,7 +603,7 @@ class PipelineSpec extends SparkTestBase {
     // centroids table with no fmt column → version 1) must fail loudly
     // with a rebuild instruction — silently wrong neighbors are the
     // failure mode the version stamp exists to prevent
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivf-stale").toString
+    val dir = Workspace.scratch("graft-ivf-stale")
     Similarity.buildIvfIndex(emb, "embedding", "vec_id", dir, nlist = 4)
     val c = spark.read.parquet(s"$dir/centroids").drop("fmt")
     val rows = java.util.Arrays.asList(c.collect(): _*)
@@ -621,7 +621,7 @@ class PipelineSpec extends SparkTestBase {
   }
 
   test("IVF-PQ append encodes with stored codebooks; twins found after append") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivfpq-app").toString
+    val dir = Workspace.scratch("graft-ivfpq-app")
     val base = emb.filter(col("vec_id") >= 10)
     Pq.buildIvfPqIndex(base, "embedding", "vec_id", dir, nlist = 8, m = 8, ksub = 16)
     Pq.appendToIvfPqIndex(
@@ -1621,7 +1621,7 @@ class PipelineSpec extends SparkTestBase {
 
   test("exportShards: one file per shard, stable membership, round-trip exact") {
     val docs500 = Tables.documents(spark, "/root/testdata/sf0.001")
-    val dir = java.nio.file.Files.createTempDirectory("graft-shards").toString
+    val dir = Workspace.scratch("graft-shards")
     Export.exportShards(docs500, "doc_id", dir, numShards = 8, salt = "r8")
     val shardDirs = new java.io.File(dir).listFiles()
       .filter(f => f.isDirectory && f.getName.startsWith("shard=")).sortBy(_.getName)
@@ -1648,7 +1648,7 @@ class PipelineSpec extends SparkTestBase {
 
   test("exportShardsJsonl: one JSONL per shard, in-shard id order, manifest verifies") {
     val docs500 = Tables.documents(spark, "/root/testdata/sf0.001")
-    val dir = java.nio.file.Files.createTempDirectory("graft-jsonl").toString
+    val dir = Workspace.scratch("graft-jsonl")
     Export.exportShardsJsonl(docs500, "doc_id", dir, numShards = 4, salt = "j8")
     val shardDirs = new java.io.File(dir).listFiles()
       .filter(f => f.isDirectory && f.getName.startsWith("shard=")).sortBy(_.getName)
@@ -1677,7 +1677,7 @@ class PipelineSpec extends SparkTestBase {
     // small corpus: every shard directory and manifest row still
     // exists, empties included — the fixed-set loader contract
     val small = docs500.limit(3)
-    val dir2 = java.nio.file.Files.createTempDirectory("graft-jsonl-small").toString
+    val dir2 = Workspace.scratch("graft-jsonl-small")
     Export.exportShardsJsonl(small, "doc_id", dir2, numShards = 6, salt = "j8")
     val dirs2 = new java.io.File(dir2).listFiles()
       .filter(f => f.isDirectory && f.getName.startsWith("shard=")).map(_.getName).toSet
@@ -1685,7 +1685,7 @@ class PipelineSpec extends SparkTestBase {
     val man2 = spark.read.json(s"$dir2/_manifest")
     assert(man2.count() === 6L)
     assert(man2.agg(sum(col("n_rows"))).head().getLong(0) === 3L)
-    val dir3 = java.nio.file.Files.createTempDirectory("graft-pq-small").toString
+    val dir3 = Workspace.scratch("graft-pq-small")
     Export.exportShards(small, "doc_id", dir3, numShards = 6, salt = "j8")
     val dirs3 = new java.io.File(dir3).listFiles()
       .filter(f => f.isDirectory && f.getName.startsWith("shard=")).map(_.getName).toSet
@@ -1704,7 +1704,7 @@ class PipelineSpec extends SparkTestBase {
       override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
         jobs.incrementAndGet()
     }
-    val dir = java.nio.file.Files.createTempDirectory("graft-backfill").toString
+    val dir = Workspace.scratch("graft-backfill")
     spark.sparkContext.addSparkListener(listener)
     try {
       Export.exportShards(small, "doc_id", dir, numShards = 64, salt = "jc")
@@ -1727,7 +1727,7 @@ class PipelineSpec extends SparkTestBase {
   test("jsonl export serializes null fields explicitly — fixed key set per line") {
     val withNulls = Seq((1L, Some("a")), (2L, None), (3L, Some("c")))
       .toDF("doc_id", "maybe")
-    val dir = java.nio.file.Files.createTempDirectory("graft-jsonl-nulls").toString
+    val dir = Workspace.scratch("graft-jsonl-nulls")
     Export.exportShardsJsonl(withNulls, "doc_id", dir, numShards = 2, salt = "nn")
     val lines = new java.io.File(dir).listFiles()
       .filter(f => f.isDirectory && f.getName.startsWith("shard="))
@@ -2188,7 +2188,7 @@ class PipelineSpec extends SparkTestBase {
     assert(gate.head().getString(0) === "pass")
     // persisted model round-trips to identical scores (train once,
     // score everywhere — the artifact contract)
-    val dir = java.nio.file.Files.createTempDirectory("graft-clf").toString
+    val dir = Workspace.scratch("graft-clf")
     graft.pipeline.Classifier.saveModel(model, dir)
     val reloaded = graft.pipeline.Classifier.loadModel(dir)
     val again = graft.pipeline.Classifier.score(
@@ -2287,8 +2287,8 @@ class PipelineSpec extends SparkTestBase {
         else if (f.getName.endsWith(".parquet")) f.length else 0L
       walk(new java.io.File(s"$d/vectors"))
     }
-    val qDir = java.nio.file.Files.createTempDirectory("graft-ivf-q").toString
-    val fDir = java.nio.file.Files.createTempDirectory("graft-ivf-f").toString
+    val qDir = Workspace.scratch("graft-ivf-q")
+    val fDir = Workspace.scratch("graft-ivf-f")
     Similarity.buildIvfIndex(emb, "embedding", "vec_id", qDir, nlist = 8)
     Similarity.buildIvfIndex(emb, "embedding", "vec_id", fDir, nlist = 8,
       quantize = false)
@@ -2522,7 +2522,7 @@ class PipelineSpec extends SparkTestBase {
     val bench = docs.filter(col("doc_id") < 3)
       .select(col("doc_id").as("query_id"),
         array_join(slice(Retrieval.tokens(col("text")), 1, 8), " ").as("qtext"))
-    val dir = java.nio.file.Files.createTempDirectory("graft-triage-idx").toString
+    val dir = Workspace.scratch("graft-triage-idx")
     Retrieval.buildTextIndex(docs, "text", "doc_id", dir, buckets = 8)
     def rows(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getDouble(1), r.getLong(2),
@@ -2540,7 +2540,7 @@ class PipelineSpec extends SparkTestBase {
     val queries = docs.filter(col("doc_id") < 2)
       .select(col("doc_id").as("query_id"),
         array_join(slice(Retrieval.tokens(col("text")), 1, 6), " ").as("qtext"))
-    val dir = java.nio.file.Files.createTempDirectory("graft-textidx-cache").toString
+    val dir = Workspace.scratch("graft-textidx-cache")
     Retrieval.buildTextIndex(docs, "text", "doc_id", dir, buckets = 8)
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
     val listener = new org.apache.spark.scheduler.SparkListener {
@@ -2574,7 +2574,7 @@ class PipelineSpec extends SparkTestBase {
     val queries = docs.filter(col("doc_id") < 2)
       .select(col("doc_id").as("query_id"),
         array_join(slice(Retrieval.tokens(col("text")), 1, 6), " ").as("qtext"))
-    val dir = java.nio.file.Files.createTempDirectory("graft-textidx-mtime").toString
+    val dir = Workspace.scratch("graft-textidx-mtime")
     def run(): Set[String] =
       Retrieval.bm25TopKIndexed(queries, dir, "qtext", "query_id", k = 5)
         .collect().map(_.toString).toSet
@@ -2591,7 +2591,7 @@ class PipelineSpec extends SparkTestBase {
     val queries = docs.filter(col("doc_id") < 3)
       .select(col("doc_id").as("query_id"),
         array_join(slice(Retrieval.tokens(col("text")), 1, 8), " ").as("qtext"))
-    val dir = java.nio.file.Files.createTempDirectory("graft-textidx").toString
+    val dir = Workspace.scratch("graft-textidx")
     Retrieval.buildTextIndex(docs, "text", "doc_id", dir, buckets = 16)
     val direct = Retrieval.bm25TopK(docs, "text", "doc_id",
       queries, "qtext", "query_id", k = 10)

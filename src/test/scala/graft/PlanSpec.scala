@@ -13,7 +13,7 @@ import graft.sparql.Sparql
   */
 class PlanSpec extends SparkTestBase {
 
-  private val dir = "/root/repo/data/wikidata"
+  private val dir = graft.ingest.WikidataIngest.defaultDir
 
   private def planOf(df: DataFrame): String =
     df.queryExecution.explainString(
@@ -296,7 +296,7 @@ class PlanSpec extends SparkTestBase {
     assert(!p1.contains("Join"), s"quantization must not join:\n$p1")
     // indexed search: equi-join on the PARTITION column — no all-pairs,
     // and the vectors scan is partition-filtered (static or dynamic)
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivf-plan").toString
+    val dir = Workspace.scratch("graft-ivf-plan")
     Similarity.buildIvfIndex(emb, "embedding", "vec_id", dir, nlist = 4)
     val idx = Similarity.ivfTopKIndexed(emb.filter(col("vec_id") < 3), dir,
       "embedding", "vec_id", k = 5, nprobe = 2)
@@ -308,7 +308,7 @@ class PlanSpec extends SparkTestBase {
 
   test("IVF-PQ search joins codes-only on the cell partition column") {
     val emb = Tables.embeddings(spark, "/root/testdata/sf0.001")
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivfpq-plan").toString
+    val dir = Workspace.scratch("graft-ivfpq-plan")
     graft.pipeline.Pq.buildIvfPqIndex(emb, "embedding", "vec_id", dir,
       nlist = 4, m = 8, ksub = 16)
     val idx = graft.pipeline.Pq.ivfPqTopKIndexed(emb.filter(col("vec_id") < 3),

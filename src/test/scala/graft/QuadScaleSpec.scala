@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.ingest.WikidataIngest
@@ -54,7 +52,7 @@ class QuadScaleSpec extends SparkTestBase {
   }
 
   test("skew store answers the planted skew queries through the real pipeline") {
-    val base = Files.createTempDirectory("graft-qs-spec").toFile.getAbsolutePath
+    val base = Workspace.scratch("graft-qs-spec")
     WikidataIngest.writeStore(spark,
       QuadScale.syntheticStatements(spark, nE, skew = true), s"$base/flat")
     WikidataIngest.createIndex(spark, s"$base/flat", s"$base/idx")

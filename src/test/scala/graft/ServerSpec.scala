@@ -11,7 +11,7 @@ import graft.server.QueryServer
 class ServerSpec extends SparkTestBase {
 
   private lazy val dir = {
-    val d = "/root/repo/data/wikidata"
+    val d = graft.ingest.WikidataIngest.defaultDir
     graft.ingest.WikidataIngest.statements(spark, d)
     d
   }
@@ -131,7 +131,7 @@ class ServerSpec extends SparkTestBase {
         assert(conn.getResponseCode === 200)
       } finally srv.stop(0)
       // a warmup failure (corrupt store) must not prevent startup
-      val bad = java.nio.file.Files.createTempDirectory("graft-badstore")
+      val bad = java.nio.file.Path.of(Workspace.scratch("graft-badstore"))
       java.nio.file.Files.createFile(bad.resolve("statements.parquet"))
       val srv2 = QueryServer.start(spark, bad.toString, 0)
       try assert(srv2.getAddress.getPort > 0) finally srv2.stop(0)
@@ -141,7 +141,7 @@ class ServerSpec extends SparkTestBase {
   test("a store rebuild bumps the epoch and invalidates cached plans") {
     // rebuild into a TEMP dir served by a second server: the epoch is
     // per store dir, so the shared fixture store stays untouched
-    val tmp = java.nio.file.Files.createTempDirectory("graft-epoch").toString
+    val tmp = Workspace.scratch("graft-epoch")
     graft.ingest.WikidataIngest.build(spark, dir = tmp)
     val srv2 = QueryServer.start(spark, tmp, 0)
     val port2 = srv2.getAddress.getPort
@@ -292,8 +292,7 @@ class ServerSpec extends SparkTestBase {
   test("POST /update mutates its store; queries on the same server observe it") {
     // a server over a PRIVATE store copy — updates must not touch the
     // shared fixture store other suites assert counts on
-    val upDir = java.nio.file.Files.createTempDirectory("graft-srv-up")
-      .toFile.getAbsolutePath
+    val upDir = Workspace.scratch("graft-srv-up")
     graft.ingest.WikidataIngest.writeStore(spark,
       graft.ingest.WikidataIngest.ingest(spark, graft.ingest.WikidataIngest.fixturePath),
       upDir)

@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions.col
 class SparqlFixtureSpec extends SparkTestBase {
 
   private lazy val dir = {
-    val d = "/root/repo/data/wikidata"
+    val d = WikidataIngest.defaultDir
     WikidataIngest.statements(spark, d) // builds if absent
     d
   }
@@ -328,7 +328,7 @@ class SparqlFixtureSpec extends SparkTestBase {
   test("spec-mode BNODE/STRDT/TIMEZONE: non-zero offsets; parity default stays Null") {
     // a store whose time values carry non-zero minute offsets (the repo
     // fixture is all tz=0), exercising the H/M duration rendering
-    val tmp = java.nio.file.Files.createTempDirectory("graft-tz").toString
+    val tmp = Workspace.scratch("graft-tz")
     def line(id: String, tz: Int) =
       s"""{"id":"$id","type":"item","labels":{},"descriptions":{},"aliases":{},
          |"claims":{"P569":[{"mainsnak":{"snaktype":"value","property":"P569",
@@ -408,7 +408,7 @@ class SparqlFixtureSpec extends SparkTestBase {
       // a minted xsd:dateTime carries SECOND precision (14) in its key —
       // the dump parser's convention for a second-resolution time — so
       // sameTerm/joins against store data of the same instant succeed
-      val tmp = java.nio.file.Files.createTempDirectory("graft-strdt").toString
+      val tmp = Workspace.scratch("graft-strdt")
       val line =
         s"""{"id":"Q9","type":"item","labels":{},"descriptions":{},"aliases":{},
            |"claims":{"P569":[{"mainsnak":{"snaktype":"value","property":"P569",
@@ -609,5 +609,15 @@ class SparqlFixtureSpec extends SparkTestBase {
       val mn = r.getStruct(2).getDouble(1)
       assert(mx >= mn)
     }
+  }
+
+  test("qualifier prefix pq: matches nothing; wdt: reaches qualifier edges (CONFORMANCE #25)") {
+    // Q31's P1082 claims carry P585 (point in time) qualifiers; the dump
+    // parser stores a qualifier edge under the direct property term, and
+    // an unknown IRI such as pq:P585 resolves to a plain string term
+    def count(qual: String): Long = rows(
+      s"SELECT ?st ?t WHERE { wd:Q31 p:P1082 ?st . ?st $qual ?t }")
+    assert(count("pq:P585") === 0L)
+    assert(count("wdt:P585") > 0L)
   }
 }

@@ -18,7 +18,7 @@ class StreamingSpec extends SparkTestBase {
 
   test("streaming dump ingest produces the same 3385 quads as batch") {
     implicit val sq = spark.sqlContext
-    val tmp = Files.createTempDirectory("graft-stream").toFile.getAbsolutePath
+    val tmp = Workspace.scratch("graft-stream")
     val inDir = Files.createDirectory(java.nio.file.Path.of(tmp, "in"))
     Files.copy(java.nio.file.Path.of(graft.ingest.WikidataIngest.fixturePath),
       inDir.resolve("lines.txt"))
@@ -29,7 +29,7 @@ class StreamingSpec extends SparkTestBase {
     assert(got.count() === 3385L)
     // spot-check statement addressing survived the stream path
     assert(got.filter(col("s.key") === "Q:31").count() ===
-      graft.ingest.WikidataIngest.statements(spark, "/root/repo/data/wikidata")
+      graft.ingest.WikidataIngest.statements(spark, graft.ingest.WikidataIngest.defaultDir)
         .filter(col("s.key") === "Q:31").count())
   }
 

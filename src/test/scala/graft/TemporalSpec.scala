@@ -140,8 +140,8 @@ class TemporalSpec extends SparkTestBase {
     val base = spark.range(200000L).select(
       pmod(hash(col("id")), lit(1024)).cast("long").as("a"),
       pmod(hash(col("id"), lit(1)), lit(1024)).cast("long").as("b"))
-    val zdir = java.nio.file.Files.createTempDirectory("graft-zlay").toString
-    val sdir = java.nio.file.Files.createTempDirectory("graft-slay").toString
+    val zdir = Workspace.scratch("graft-zlay")
+    val sdir = Workspace.scratch("graft-slay")
     graft.operators.Layout.zOrderBy(base, col("a"), col("b"), bitsPerDim = 10)
       .write.option("parquet.block.size", 64 * 1024)
       .mode("overwrite").parquet(zdir)

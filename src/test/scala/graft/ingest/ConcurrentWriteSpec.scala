@@ -1,11 +1,9 @@
 package graft.ingest
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 
-import graft.SparkTestBase
+import graft.{SparkTestBase, Workspace}
 
 /** Failure semantics of the concurrent store-rewrite batches
   * ([[WikidataIngest.inParallel]] + the per-writer dynamic partition
@@ -15,16 +13,13 @@ import graft.SparkTestBase
   */
 class ConcurrentWriteSpec extends SparkTestBase {
 
-  private def tmp(prefix: String): String =
-    Files.createTempDirectory(prefix).toFile.getAbsolutePath
-
   private def partitionRows(base: String, bucket: Int): Set[Long] =
     spark.read.parquet(base).filter(col("b") === bucket)
       .select("v").collect().map(_.getLong(0)).toSet
 
   test("a failing concurrent rewrite cannot truncate untouched partitions") {
     import spark.implicits._
-    val base = tmp("graft-cw") + "/perm.parquet"
+    val base = Workspace.scratch("graft-cw") + "/perm.parquet"
     // four partitions b=0..3, two rows each
     (0L until 8L).map(i => (i % 4, i)).toDF("b", "v")
       .repartition(1)

@@ -1,11 +1,9 @@
 package graft.sparql
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
-import graft.SparkTestBase
+import graft.{SparkTestBase, Workspace}
 import graft.ingest.{IndexMaintenance, Tombstones, WikidataIngest}
 import graft.model.{Term, TermValue}
 import Ast._
@@ -22,9 +20,6 @@ import Ast._
   *     fully-emptied partitions actually removed from disk.
   */
 class UpdateSpec extends SparkTestBase {
-
-  private def tmp(prefix: String): String =
-    Files.createTempDirectory(prefix).toFile.getAbsolutePath
 
   /** Synthetic quads: entity Q(i) --P(1 + i%4)--> Q(1000+i) in graph
     * Q(i), i in [0, n). P nums 1..4 land in distinct buckets under a
@@ -51,8 +46,8 @@ class UpdateSpec extends SparkTestBase {
   }
 
   private def buildIdx(n: Int, buckets: Int = 4): String = {
-    val flat = tmp("graft-up-flat")
-    val idx = tmp("graft-up-idx")
+    val flat = Workspace.scratch("graft-up-flat")
+    val idx = Workspace.scratch("graft-up-idx")
     WikidataIngest.writeStore(spark, mkQuads(n), flat)
     WikidataIngest.createIndex(spark, flat, idx, buckets)
     idx
@@ -226,7 +221,7 @@ class UpdateSpec extends SparkTestBase {
   // ---------------------------------------------------------- flat store
 
   test("flat store: insert, delete, label maintenance, vacuum") {
-    val flat = tmp("graft-up-flatonly")
+    val flat = Workspace.scratch("graft-up-flatonly")
     WikidataIngest.writeStore(spark, mkQuads(16), flat)
     val r = Update.execute(spark,
       """INSERT DATA { wd:Q500 wdt:P1 wd:Q0 . wd:Q500 rdfs:label "five hundred"@en } ;

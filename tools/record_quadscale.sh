@@ -11,7 +11,7 @@
 set -e
 OUT=${1:?usage: record_quadscale.sh <outPrefix>}
 BASE=$(mktemp -d /tmp/graft-qs14-XXXX)
-CP="/root/repo/target/scala-2.13/classes:/opt/spark/jars/*"
+CP="$(cd "$(dirname "$0")/.." && pwd)/target/scala-2.13/classes:/opt/spark/jars/*"
 AO="--add-opens=java.base/java.lang=ALL-UNNAMED --add-opens=java.base/java.lang.invoke=ALL-UNNAMED --add-opens=java.base/java.lang.reflect=ALL-UNNAMED --add-opens=java.base/java.io=ALL-UNNAMED --add-opens=java.base/java.net=ALL-UNNAMED --add-opens=java.base/java.nio=ALL-UNNAMED --add-opens=java.base/java.util=ALL-UNNAMED --add-opens=java.base/java.util.concurrent=ALL-UNNAMED --add-opens=java.base/java.util.concurrent.atomic=ALL-UNNAMED --add-opens=java.base/sun.nio.ch=ALL-UNNAMED --add-opens=java.base/sun.nio.cs=ALL-UNNAMED --add-opens=java.base/sun.security.action=ALL-UNNAMED --add-opens=java.base/sun.util.calendar=ALL-UNNAMED --add-opens=jdk.httpserver/sun.net.httpserver=ALL-UNNAMED"
 run() { # run <xmx> <targets> <modes> <outfile>
   java $AO -Xmx$1 -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
