@@ -19,7 +19,10 @@ object Main {
     """usage: graft.Main <create-db|create-index|server|cli> [args]
       |  create-db <dump> <dbDir> [--partitioned] [--buckets=N]
       |            [--no-qualifiers] [--lang=en,de,...] [--lexemes]
+      |            (--partitioned writes before the store's size is known:
+      |             --buckets defaults to 64)
       |  create-index <flatDbDir> <outDir> [--buckets=N] [--zorder=colA,colB]
+      |            (default --buckets: sized from the flat store, 1 per 16 MB, max 64)
       |  append-index <dump> <dbDir> [--no-qualifiers] [--lang=en,de,...] [--lexemes]
       |  compact-index <dbDir> [--max-files=N]
       |  update <dbDir> "<sparql-update>"
@@ -64,10 +67,9 @@ object Main {
       }
       if (zorderRaw.exists(_.length != 2)) { System.err.println(usage); return 2 }
       val zorder = zorderRaw.map { case Seq(x, y) => (x, y) }
+      // no --buckets: 0, so createIndex sizes the count from the store
       ingest.WikidataIngest.createIndex(GraftSession.get(),
-        positional(0), positional(1),
-        intFlag(args.tail, "buckets", ingest.WikidataIngest.NumPredBuckets),
-        zorder)
+        positional(0), positional(1), intFlag(args.tail, "buckets", 0), zorder)
       println(s"indexed ${positional(0)} into ${positional(1)}")
       0
     case Some("append-index") =>

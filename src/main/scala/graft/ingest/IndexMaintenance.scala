@@ -3,6 +3,7 @@ package graft.ingest
 import java.io.File
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 
 /** Incremental maintenance of the four-permutation quad store.
@@ -57,17 +58,6 @@ object IndexMaintenance {
     */
   final case class IndexMeta(buckets: Int, generation: Long, maxOrd: Long,
                              lastBatch: Long)
-
-  /** Caller-supplied per-delta statistics for [[appendToIndex]], used
-    * when the delta already lives on the driver (Update's literal
-    * templates): `maxOrd` is the delta's OWN max ordinal (before the
-    * store offset), `counts` the per-predicate row totals, `dS`/`dO`
-    * the per-predicate maxima of rows sharing one subject/object.
-    */
-  final case class DeltaStats(rows: Long, maxOrd: Long,
-                              counts: Map[String, Long],
-                              dS: Map[String, Long],
-                              dO: Map[String, Long])
 
   def readMeta(spark: SparkSession, dir: String): IndexMeta = {
     val f = new File(s"$dir/meta.json")
@@ -126,8 +116,7 @@ object IndexMaintenance {
     * existing store files are never read or rewritten.
     */
   def appendToIndex(spark: SparkSession, dir: String, delta: DataFrame,
-                    batchId: Option[Long] = None,
-                    stats: Option[DeltaStats] = None): Long = {
+                    batchId: Option[Long] = None): Long = {
     require(new File(s"$dir/statements_sub.parquet").exists(),
       s"$dir is not a partitioned index store (run create-index first)")
     requireNotPending(dir)
@@ -141,19 +130,30 @@ object IndexMaintenance {
     val n = try {
       // offset ords past the store's max so insertion order equals a
       // full rebuild over base-then-delta input; materialize once —
-      // UNLESS the caller pre-computed the stats (Update's driver tier:
-      // the delta is a LocalRelation there, free to recompute per
-      // write, so neither the checkpoint nor the stats pass runs a job)
+      // UNLESS the optimized plan is a LocalRelation (Update's literal
+      // templates): its rows already sit on the driver, free to
+      // recompute per write, so neither the checkpoint nor the stats
+      // pass runs a job
       val d0 = WikidataIngest.rendered(
         delta.withColumn("ord", col("ord") + lit(meta.maxOrd + 1L)))
-      val d = if (stats.isDefined) d0 else d0.localCheckpoint()
-      // ONE pass over the checkpointed delta yields row count, max
-      // ordinal, per-predicate totals AND both degree maxima (was four
-      // separate jobs — pure fixed overhead per append batch); both
-      // degree sides ride one explode, map-side combine applies after
-      // it, and the collect is bounded by the delta's predicate
-      // vocabulary
-      lazy val perPred = d.select(col("p.key").as("k"), col("ord"),
+      val local = d0.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]
+      val d = if (local) d0 else d0.localCheckpoint()
+      // per (predicate, side "s"/"o"): total rows, max rows sharing one
+      // s/o key, max ordinal. Distributed, ONE pass over the
+      // checkpointed delta yields all of them (was four separate jobs —
+      // pure fixed overhead per append batch); both degree sides ride
+      // one explode, map-side combine applies after it, and the collect
+      // is bounded by the delta's predicate vocabulary
+      val perPred: Seq[(String, String, Long, Long, Long)] = if (local) {
+        val qs = d.select(col("p.key"), col("s.key"), col("o.key"), col("ord"))
+          .collect().toSeq // a LocalRelation collects without a job
+        for {
+          (k, g) <- qs.groupBy(_.getString(0)).toSeq
+          (side, i) <- Seq("s" -> 1, "o" -> 2)
+        } yield (k, side, g.size.toLong,
+          g.groupBy(_.getString(i)).valuesIterator.map(_.size.toLong).max,
+          g.map(_.getLong(3)).max)
+      } else d.select(col("p.key").as("k"), col("ord"),
           explode(array(
             struct(lit("s").as("side"), col("s.key").as("g")),
             struct(lit("o").as("side"), col("o.key").as("g")))).as("sg"))
@@ -161,15 +161,15 @@ object IndexMaintenance {
         .agg(count(lit(1)).as("c"), max(col("ord")).as("mo"))
         .groupBy(col("k"), col("side"))
         .agg(sum(col("c")).as("total"), max(col("c")).as("m"), max(col("mo")).as("mo"))
-        .collect()
-      val rows = stats.map(_.rows).getOrElse(
-        perPred.filter(_.getString(1) == "s").map(_.getLong(2)).sum)
+        .collect().toSeq
+        .map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getLong(3), r.getLong(4)))
+      def bySide(side: String) = perPred.filter(_._2 == side)
+      val rows = bySide("s").map(_._3).sum
       if (rows == 0L) {
         // nothing to write; still advance the batch watermark
         writeMeta(dir, meta.copy(lastBatch = batchId.getOrElse(meta.lastBatch)))
       } else {
-        val newMaxOrd = stats.map(_.maxOrd + meta.maxOrd + 1L).getOrElse(
-          perPred.map(_.getLong(4)).max)
+        val newMaxOrd = perPred.map(_._5).max
         val hasGraph = d.columns.contains("graph")
         // one-file-per-touched-bucket per append (the small-file
         // invariant compaction relies on) needs each bucket's rows in
@@ -212,15 +212,9 @@ object IndexMaintenance {
         // ordering dependency)
         val preCounts = WikidataIngest.predCounts(dir).getOrElse(Map.empty)
         val preFloor = WikidataIngest.predCountsFloor(dir)
-        val deltaCounts = stats.map(_.counts).getOrElse(
-          perPred.filter(_.getString(1) == "s")
-            .map(r => r.getString(0) -> r.getLong(2)).toMap)
-        val dS = stats.map(_.dS).getOrElse(
-          perPred.filter(_.getString(1) == "s")
-            .map(r => r.getString(0) -> r.getLong(3)).toMap)
-        val dO = stats.map(_.dO).getOrElse(
-          perPred.filter(_.getString(1) == "o")
-            .map(r => r.getString(0) -> r.getLong(3)).toMap)
+        val deltaCounts = bySide("s").map(t => t._1 -> t._3).toMap
+        val dS = bySide("s").map(t => t._1 -> t._4).toMap
+        val dO = bySide("o").map(t => t._1 -> t._4).toMap
         mergePredCounts(dir, deltaCounts, preCounts, preFloor)
         mergePredFanout(dir, dS, dO, preCounts, preFloor)
         writeMeta(dir, meta.copy(generation = meta.generation + 1L,

@@ -250,7 +250,7 @@ object WikidataIngest {
   }
 
   /** Total bytes of the parquet files under `path` (recursive). */
-  private[ingest] def dirBytes(path: String): Long = {
+  private[graft] def dirBytes(path: String): Long = {
     def walk(f: java.io.File): Long = {
       val cs = Option(f.listFiles()).map(_.toSeq).getOrElse(Nil)
       cs.collect { case c if c.isFile && c.getName.endsWith(".parquet") => c.length }.sum +

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.DriverTier
+
 /** Deduplication operators for large-scale training-data pipelines.
   *
   * All operators are pure Column-expression plans: hashing, shingling,
@@ -663,26 +665,17 @@ object Dedup {
       .distinct()
       .localCheckpoint(true) // reused every round
     // Measured-size plan choice (the Paths.scala pattern): a pair set
-    // under the budget is solved by union-find on the driver — one
-    // bounded collect instead of O(log diameter) shuffle rounds, same
-    // (doc_id, min-reachable-id) rows. The edge set is already
-    // materialized, so the count is free; above the budget (or for id
+    // within the budget is solved by union-find on the driver — one
+    // bounded probe instead of O(log diameter) shuffle rounds, same
+    // (doc_id, min-reachable-id) rows. Above the budget (or for id
     // types without a `least()`-compatible JVM ordering) the
-    // distributed fixpoint below runs unchanged.
-    val budget = math.min(edges.sparkSession.conf
-      .get("spark.graft.clusters.driverMaxEdges", (1 << 20).toString).toLong,
-      Int.MaxValue - 1L).toInt
-    // ONE bounded limit-collect both measures and fetches: at most
-    // budget+1 rows come back (limit early-terminates above it), so
-    // the driver path no longer pays a separate count job and the
-    // distributed path pays a truncated probe instead of a full count
-    val probe = edges.limit(budget + 1).collect()
-    if (probe.length <= budget) {
-      driverComponents(edges, probe) match {
-        case Some(df) => return df
-        case None => // unsupported id type — take the distributed path
-      }
-    }
+    // distributed fixpoint below runs unchanged, and the probe has
+    // brought at most DriverTier.FirstStep+1 rows to the driver.
+    val budget = edges.sparkSession.conf
+      .get("spark.graft.clusters.driverMaxEdges", (1 << 20).toString).toLong
+    val driverPlan = DriverTier.collectIfAtMost(edges, budget)
+      .flatMap(driverComponents(edges, _))
+    if (driverPlan.isDefined) return driverPlan.get
     var labels = edges.groupBy("src").agg(min("dst").as("m"))
       .select(col("src").as("id"), least(col("src"), col("m")).as("cid"))
       .localCheckpoint(true)

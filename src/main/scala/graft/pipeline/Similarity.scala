@@ -452,7 +452,7 @@ object Similarity {
     val fmt =
       if (!df.columns.contains("fmt")) 1
       else {
-        val r = df.select(max(col("fmt"))).head
+        val r = df.select(max(col("fmt"))).head()
         if (r.isNullAt(0)) throw new IllegalArgumentException(
           s"index at $dir has an empty or partially-written centroids " +
             "table; rebuild the index with buildIvfIndex/buildIvfPqIndex")

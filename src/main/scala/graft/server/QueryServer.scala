@@ -54,14 +54,7 @@ object QueryServer {
     * Plans are driver-heap small (no data), so the default is generous.
     */
   private val PlanCacheDefaultSize = 256
-  private val planCache =
-    new java.util.LinkedHashMap[String, org.apache.spark.sql.DataFrame](
-      16, 0.75f, /*accessOrder=*/ true) {
-      @volatile var maxEntries: Int = PlanCacheDefaultSize
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[String, org.apache.spark.sql.DataFrame]): Boolean =
-        size() > maxEntries
-    }
+  private val planCache = new Lru[String, org.apache.spark.sql.DataFrame](PlanCacheDefaultSize)
   // test/ops visibility: how often the cache short-circuits translation
   private[graft] val planCacheHits = new AtomicLong()
   private[graft] val planCacheMisses = new AtomicLong()
@@ -87,14 +80,7 @@ object QueryServer {
     val flags = graft.sparql.TranslateFlags.fingerprint(spark)
     val key = s"$dir|${graft.ingest.WikidataIngest.storeEpoch(dir)}|$flags|$q"
     val cached = planCache.synchronized {
-      planCache.maxEntries = maxEntries
-      // removeEldestEntry evicts at most one entry per put, so a
-      // LOWERED size bound needs an explicit trim or the cache stays
-      // pinned at its previously attained size forever
-      val it = planCache.entrySet().iterator()
-      while (planCache.size() > maxEntries && it.hasNext) {
-        it.next(); it.remove()
-      }
+      planCache.resize(maxEntries)
       Option(planCache.get(key))
     }
     cached match {
@@ -256,63 +242,33 @@ object QueryServer {
     * store-epoch plan-cache key.
     */
   private def handleUpdate(spark: SparkSession, dir: String, ex: HttpExchange): Unit = {
-    def respond(code: Int, body: String, contentType: String): Unit = {
-      val bytes = body.getBytes(StandardCharsets.UTF_8)
-      ex.getResponseHeaders.add("Access-Control-Allow-Origin", "*")
-      ex.getResponseHeaders.add("Content-Type", contentType)
-      ex.sendResponseHeaders(code, bytes.length.toLong)
-      val os = ex.getResponseBody
-      try os.write(bytes) finally os.close()
-    }
     try {
-      if (ex.getRequestMethod == "OPTIONS") {
-        ex.getResponseHeaders.add("Access-Control-Allow-Origin", "*")
-        ex.getResponseHeaders.add("Access-Control-Allow-Methods", "POST, OPTIONS")
-        ex.getResponseHeaders.add("Access-Control-Allow-Headers", "Content-Type")
-        ex.sendResponseHeaders(204, -1L)
-        ex.close()
-        return
-      }
+      if (preflight(ex, "POST, OPTIONS")) return
       if (ex.getRequestMethod != "POST") {
-        respond(405, "updates require POST (SPARQL 1.1 Protocol §2.2)", "text/plain")
+        respond(ex, 405, "updates require POST (SPARQL 1.1 Protocol §2.2)", "text/plain")
         return
       }
-      val maxBody = spark.conf
-        .get("spark.graft.server.maxBodyBytes", (1 << 20).toString)
-        .toIntOption.filter(_ > 0).getOrElse(1 << 20)
-      val bytes = ex.getRequestBody
-        .readNBytes(math.min(maxBody.toLong + 1, Int.MaxValue.toLong).toInt)
-      if (bytes.length > maxBody) {
-        respond(413, s"request body exceeds " +
-          s"spark.graft.server.maxBodyBytes=$maxBody", "text/plain")
-        return
-      }
-      val body = new String(bytes, StandardCharsets.UTF_8)
-      val ct = Option(ex.getRequestHeaders.getFirst("Content-Type")).getOrElse("")
+      val body = readBody(spark, ex)
       val updateText =
-        if (ct.split(';').head.trim.equalsIgnoreCase("application/sparql-update"))
-          Some(body)
-        else body.split('&').iterator.map(_.split("=", 2))
-          .collectFirst { case Array(k, v)
-              if URLDecoder.decode(k, "UTF-8") == "update" =>
-            URLDecoder.decode(v, "UTF-8")
-          }
+        if (contentTypeIs(ex, "application/sparql-update")) Some(body)
+        else formParams(body).get("update")
       updateText match {
-        case None => respond(400, "missing 'update' parameter", "text/plain")
+        case None => respond(ex, 400, "missing 'update' parameter", "text/plain")
         case Some(u) =>
           val r = updateLock.synchronized {
             graft.sparql.Update.execute(spark, u, dir)
           }
-          respond(200, s"""{"inserted": ${r.inserted}, "deleted": ${r.deleted}, """ +
+          respond(ex, 200, s"""{"inserted": ${r.inserted}, "deleted": ${r.deleted}, """ +
             s""""undeleted": ${r.undeleted}}""", "application/json")
       }
     } catch {
+      case r: Rejected => respond(ex, r.code, r.getMessage, "text/plain")
       case e: graft.sparql.Parser.ParseException =>
-        respond(400, s"update parse error: ${e.getMessage}", "text/plain")
+        respond(ex, 400, s"update parse error: ${e.getMessage}", "text/plain")
       case e: IllegalArgumentException =>
-        respond(409, s"store not updatable: ${e.getMessage}", "text/plain")
+        respond(ex, 409, s"store not updatable: ${e.getMessage}", "text/plain")
       case scala.util.control.NonFatal(e) =>
-        respond(500, s"update failed: ${e.getClass.getSimpleName}: ${e.getMessage}",
+        respond(ex, 500, s"update failed: ${e.getClass.getSimpleName}: ${e.getMessage}",
           "text/plain")
     } finally ex.close()
   }
@@ -322,33 +278,86 @@ object QueryServer {
     */
   private val updateLock = new Object
 
-  private def handle(spark: SparkSession, dir: String, ex: HttpExchange): Unit = {
-    def respond(code: Int, body: String, contentType: String): Unit = {
-      val bytes = body.getBytes(StandardCharsets.UTF_8)
+  /** A request refused before any work: `code` and the plain-text
+    * message to answer with.
+    */
+  private final class Rejected(val code: Int, msg: String) extends Exception(msg)
+
+  /** A complete response, with the CORS header every endpoint carries. */
+  private def respond(ex: HttpExchange, code: Int, body: String, contentType: String): Unit = {
+    val bytes = body.getBytes(StandardCharsets.UTF_8)
+    ex.getResponseHeaders.add("Access-Control-Allow-Origin", "*")
+    ex.getResponseHeaders.add("Content-Type", contentType)
+    ex.sendResponseHeaders(code, bytes.length.toLong)
+    val os = ex.getResponseBody
+    try os.write(bytes) finally os.close()
+  }
+
+  /** Answer a CORS preflight (a browser POSTing a raw SPARQL body sends
+    * OPTIONS first); true when the request was one.
+    */
+  private def preflight(ex: HttpExchange, methods: String): Boolean = {
+    val isPreflight = ex.getRequestMethod == "OPTIONS"
+    if (isPreflight) {
       ex.getResponseHeaders.add("Access-Control-Allow-Origin", "*")
-      ex.getResponseHeaders.add("Content-Type", contentType)
-      ex.sendResponseHeaders(code, bytes.length.toLong)
-      val os = ex.getResponseBody
-      try os.write(bytes) finally os.close()
+      ex.getResponseHeaders.add("Access-Control-Allow-Methods", methods)
+      ex.getResponseHeaders.add("Access-Control-Allow-Headers", "Content-Type")
+      ex.sendResponseHeaders(204, -1L)
+      ex.close()
     }
-    def formParams(s: String): Map[String, String] = s.split('&')
-      .iterator.map(_.split("=", 2))
+    isPreflight
+  }
+
+  private def contentTypeIs(ex: HttpExchange, mime: String): Boolean =
+    Option(ex.getRequestHeaders.getFirst("Content-Type")).getOrElse("")
+      .split(';').head.trim.equalsIgnoreCase(mime)
+
+  /** The request body as UTF-8, read under
+    * `spark.graft.server.maxBodyBytes`: an unbounded readAllBytes would
+    * let one client buffer arbitrary bytes into the server heap.
+    */
+  private def readBody(spark: SparkSession, ex: HttpExchange): String = {
+    val maxBody = spark.conf
+      .get("spark.graft.server.maxBodyBytes", (1 << 20).toString)
+      .toIntOption.filter(_ > 0)
+      .getOrElse(throw new Rejected(500,
+        "spark.graft.server.maxBodyBytes must be a positive int"))
+    val bytes = ex.getRequestBody
+      .readNBytes(math.min(maxBody.toLong + 1, Int.MaxValue.toLong).toInt)
+    if (bytes.length > maxBody) {
+      // drain (bounded) before responding: on keep-alive connections an
+      // undrained body makes the JDK server reset the connection
+      // mid-upload instead of delivering the 413. Clients streaming
+      // past the drain cap lose the connection — that is the correct
+      // outcome for them.
+      val drainBuf = new Array[Byte](8192)
+      var drained = 0L
+      var n = 0
+      while (n >= 0 && drained < (8L << 20)) {
+        n = ex.getRequestBody.read(drainBuf)
+        if (n > 0) drained += n
+      }
+      throw new Rejected(413, s"request body exceeds spark.graft.server.maxBodyBytes=$maxBody")
+    }
+    new String(bytes, StandardCharsets.UTF_8)
+  }
+
+  /** Decode an urlencoded form; a malformed percent-escape (URLDecoder
+    * throws) is a client error, not a silent connection close.
+    */
+  private def formParams(s: String): Map[String, String] =
+    try s.split('&').iterator.map(_.split("=", 2))
       .collect { case Array(k, v) =>
         URLDecoder.decode(k, "UTF-8") -> URLDecoder.decode(v, "UTF-8")
       }.toMap
+    catch {
+      case e: IllegalArgumentException =>
+        throw new Rejected(400, s"malformed request encoding: ${e.getMessage}")
+    }
+
+  private def handle(spark: SparkSession, dir: String, ex: HttpExchange): Unit = {
     try {
-      // CORS preflight: a browser POSTing application/sparql-query
-      // sends OPTIONS first
-      if (ex.getRequestMethod == "OPTIONS") {
-        ex.getResponseHeaders.add("Access-Control-Allow-Origin", "*")
-        ex.getResponseHeaders.add("Access-Control-Allow-Methods", "GET, POST, OPTIONS")
-        ex.getResponseHeaders.add("Access-Control-Allow-Headers", "Content-Type")
-        ex.sendResponseHeaders(204, -1L)
-        ex.close()
-        return
-      }
-      // malformed percent-escapes (URLDecoder throws) are a client
-      // error, not a silent connection close
+      if (preflight(ex, "GET, POST, OPTIONS")) return
       val params =
         try {
           val qsParams = formParams(Option(ex.getRequestURI.getRawQuery).getOrElse(""))
@@ -357,49 +366,17 @@ object QueryServer {
           // application/sparql-query (the only way to send queries past
           // URL-length limits; the reference is GET-only, server.rs:87-141)
           if (ex.getRequestMethod == "POST") {
-            // bounded read: an unbounded readAllBytes would let one
-            // client buffer arbitrary bytes into the server heap
-            val maxBodyOpt = spark.conf
-              .get("spark.graft.server.maxBodyBytes", (1 << 20).toString)
-              .toIntOption.filter(_ > 0)
-            if (maxBodyOpt.isEmpty) {
-              respond(500, "spark.graft.server.maxBodyBytes must be a " +
-                "positive int", "text/plain")
-              return
-            }
-            val maxBody = maxBodyOpt.get
-            val fetch = math.min(maxBody.toLong + 1, Int.MaxValue.toLong).toInt
-            val bytes = ex.getRequestBody.readNBytes(fetch)
-            if (bytes.length > maxBody) {
-              // drain (bounded) before responding: on keep-alive
-              // connections an undrained body makes the JDK server
-              // reset the connection mid-upload instead of delivering
-              // the 413. Clients streaming past the drain cap lose the
-              // connection — that is the correct outcome for them.
-              val drainBuf = new Array[Byte](8192)
-              var drained = 0L
-              var n = 0
-              while (n >= 0 && drained < (8L << 20)) {
-                n = ex.getRequestBody.read(drainBuf)
-                if (n > 0) drained += n
-              }
-              respond(413, s"request body exceeds " +
-                s"spark.graft.server.maxBodyBytes=$maxBody", "text/plain")
-              return
-            }
-            val body = new String(bytes, StandardCharsets.UTF_8)
-            val ct = Option(ex.getRequestHeaders.getFirst("Content-Type")).getOrElse("")
-            if (ct.split(';').head.trim.equalsIgnoreCase("application/sparql-query"))
-              qsParams + ("query" -> body)
+            val body = readBody(spark, ex)
+            if (contentTypeIs(ex, "application/sparql-query")) qsParams + ("query" -> body)
             else qsParams ++ formParams(body)
           } else qsParams
         } catch {
-          case e: IllegalArgumentException =>
-            respond(400, s"malformed request encoding: ${e.getMessage}", "text/plain")
+          case r: Rejected =>
+            respond(ex, r.code, r.getMessage, "text/plain")
             return
         }
       params.get("query") match {
-        case None => respond(400, "missing 'query' parameter", "text/plain")
+        case None => respond(ex, 400, "missing 'query' parameter", "text/plain")
         case Some(q) =>
           // `&explain=true` (or =simple|extended|codegen|cost|formatted)
           // returns the Catalyst plan as text WITHOUT running any job —
@@ -416,13 +393,13 @@ object QueryServer {
             catch { case e: IllegalArgumentException => Some(e.getMessage) }
           }
           if (badMode.isDefined) {
-            respond(400, s"bad explain mode: ${badMode.get}", "text/plain")
+            respond(ex, 400, s"bad explain mode: ${badMode.get}", "text/plain")
             return
           }
           val timeoutMsOpt = spark.conf
             .get("spark.graft.server.timeoutMs", "0").toLongOption.filter(_ >= 0)
           if (timeoutMsOpt.isEmpty) {
-            respond(500, "spark.graft.server.timeoutMs must be a " +
+            respond(ex, 500, "spark.graft.server.timeoutMs must be a " +
               "non-negative long", "text/plain")
             return
           }
@@ -446,7 +423,7 @@ object QueryServer {
           // a hung one
           val streamedBytes = new AtomicLong(-1L)
           def respondOnce(code: Int, body: String, contentType: String): Unit =
-            if (sent.compareAndSet(false, true)) respond(code, body, contentType)
+            if (sent.compareAndSet(false, true)) respond(ex, code, body, contentType)
           val reqId = reqIds.incrementAndGet()
           val group = s"graft-http-$reqId"
           val task = queryPool.submit(new Callable[Option[String]] {
@@ -600,5 +577,22 @@ object QueryServer {
     start(spark, dir, port)
     println(s"listening on http://localhost:$port/query")
     Thread.currentThread().join()
+  }
+}
+
+/** Access-ordered LRU map whose bound can change at runtime. */
+private final class Lru[K, V](private var maxEntries: Int)
+    extends java.util.LinkedHashMap[K, V](16, 0.75f, /*accessOrder=*/ true) {
+  override def removeEldestEntry(e: java.util.Map.Entry[K, V]): Boolean =
+    size() > maxEntries
+
+  /** Set the bound, evicting the eldest entries past it at once:
+    * removeEldestEntry evicts at most one entry per put, so a LOWERED
+    * bound would otherwise stay pinned at the size already attained.
+    */
+  def resize(n: Int): Unit = {
+    maxEntries = n
+    val it = entrySet().iterator()
+    while (size() > n && it.hasNext) { it.next(); it.remove() }
   }
 }

@@ -1,7 +1,12 @@
 package graft.sparql
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
+
+import graft.DriverTier
 
 import graft.model.{Term, TermOps}
 import Ast._
@@ -267,37 +272,24 @@ object Paths {
     val seed0 = mode.seed(st, start)
     val budget = maxRowsBudget(st)
     // MEASURED-size plan choice: the edge relation is pre-filtered (the
-    // path predicate pushed into the scan) and already materialized, so
-    // its exact size is one cheap count away. Below the smallRows
-    // threshold the BFS runs ON THE DRIVER in one pass — a depth-D
-    // chain otherwise costs D distributed rounds at a fixed multi-job
-    // price each (QuadScale path_star: 31 rounds ≈ 13 s of pure
-    // per-round overhead for a 32-node answer; the reference answers
-    // this with an in-memory traversal for the same reason). Above the
-    // threshold — edge sets that genuinely need the cluster — the
-    // distributed frontier fixpoint below is unchanged. In GraphMode
-    // the SEED is one row per distinct named graph (a dump-provenance
-    // store has millions), so the edge count alone does not bound what
-    // the driver would collect — the seed's size is probed the same
-    // way: the driver plan applies whenever BOTH measured sets are
-    // small, and a million-graph store still takes the distributed
-    // plan. ONE bounded limit-collect per set both measures it and
-    // fetches it for the driver BFS (the former checkpoint + count +
-    // collect chain was three jobs per set for the same bytes); a set
-    // at or past the threshold early-terminates the probe and runs
-    // distributed, checkpointed exactly as before.
-    val small = math.min(smallRowsBudget(st), Int.MaxValue.toLong).toInt
-    val edgeProbe = edges0.select(col("__ks"), col("__ko"), col(O))
-      .limit(small).collect()
-    if (edgeProbe.length < small) {
-      val seedSel = seed0.select(col(O), col("__ko"))
-      val seedProbe =
-        if (mode eq PlainMode) seedSel.collect() // bound start: 1 row
-        else seedSel.limit(small).collect()
-      if ((mode eq PlainMode) || seedProbe.length < small)
-        return reachableFromDriver(edges0, edgeProbe, seedProbe,
-          start, includeStart, mode, budget)
-    }
+    // path predicate pushed into the scan), so one DriverTier probe both
+    // measures and fetches it. At most smallRows edges run as a driver
+    // BFS in one pass — a depth-D chain otherwise costs D distributed
+    // rounds at a fixed multi-job price each (QuadScale path_star: 31
+    // rounds ≈ 13 s of pure per-round overhead for a 32-node answer;
+    // the reference answers this with an in-memory traversal for the
+    // same reason). The SEED is probed too: in GraphMode it is one row
+    // per distinct named graph (a dump-provenance store has millions),
+    // so the driver plan applies only when BOTH sets fit, and a
+    // million-graph store still takes the distributed plan below,
+    // checkpointed exactly as before.
+    val small = smallRowsBudget(st)
+    val driverPlan = for {
+      edgeRows <- DriverTier.collectIfAtMost(
+        edges0.select(col("__ks"), col("__ko"), col(O)), small)
+      seedRows <- DriverTier.collectIfAtMost(seed0.select(col(O), col("__ko")), small)
+    } yield reachableFromDriver(edges0, edgeRows, seedRows, start, includeStart, mode, budget)
+    if (driverPlan.isDefined) return driverPlan.get
     val edges = edges0.localCheckpoint(true)
     val seed = seed0.localCheckpoint(true)
     var rows = 0L
@@ -342,80 +334,64 @@ object Paths {
     result.select(mode.startNode(col(O), start).as(S), col(O))
   }
 
-  /** Single-pass driver BFS over a MEASURED-small edge set (the
-    * `smallRows` plan of [[reachableFrom]]): adjacency map + queue,
-    * zero Spark jobs per level. Semantics identical to the distributed
-    * fixpoint — same reached-vs-frontier distinction (a cycle back to
-    * the start counts as reachable, but is never re-expanded), same
-    * row budget — except the 64-round cap does not apply: a driver BFS
-    * provably terminates within |nodes| levels, all bounded by the
-    * threshold that routed it here. Collected bytes are bounded by
-    * `spark.graft.path.smallRows` edge rows — the same order as one
-    * executor's working set for the distributed plan.
+  /** The one driver BFS behind both driver plans: the keys reachable
+    * in >= 1 step from `seeds` over `adj`, in discovery order. A
+    * reached key is expanded further only when `expand` holds (the
+    * reached-vs-expanded distinction: a cycle back to a bound start
+    * counts as reached but is never re-expanded). `onLevel` sees the
+    * reached count after every level. Zero Spark jobs; terminates
+    * within |nodes| levels, so no round cap applies.
     */
-  private def reachableFromDriver(edges: DataFrame,
-                                  edgeRows: Array[org.apache.spark.sql.Row],
-                                  seedRows0: Array[org.apache.spark.sql.Row],
+  private def driverBfs(adj: Map[String, Seq[String]], seeds: Seq[String],
+                        expand: String => Boolean = _ => true)
+                       (onLevel: Int => Unit = _ => ()): collection.Set[String] = {
+    val reached = scala.collection.mutable.LinkedHashSet.empty[String]
+    var frontier = seeds
+    while (frontier.nonEmpty) {
+      val fresh = frontier.flatMap(k => adj.getOrElse(k, Nil).filter(reached.add))
+      onLevel(reached.size)
+      frontier = fresh.filter(expand)
+    }
+    reached
+  }
+
+  /** Adjacency of collected edge rows whose first two columns are the
+    * `__ks`/`__ko` keys (rows with a null key join nothing).
+    */
+  private def adjacency(rows: Array[Row]): Map[String, Seq[String]] =
+    rows.toSeq.filter(r => !r.isNullAt(0) && !r.isNullAt(1))
+      .groupMap(_.getString(0))(_.getString(1))
+
+  /** Driver plan of [[reachableFrom]] over the probed `(__ks, __ko, O)`
+    * edge rows and `(O, __ko)` seed rows. Semantics identical to the
+    * distributed fixpoint — same reached-vs-frontier distinction, same
+    * row budget — except the 64-round cap does not apply.
+    */
+  private def reachableFromDriver(edges: DataFrame, edgeRows: Array[Row],
+                                  seedRows: Array[Row],
                                   start: graft.model.TermValue,
                                   includeStart: Boolean, mode: NodeMode,
                                   budget: Long): DataFrame = {
-    import org.apache.spark.sql.Row
-    val spark = edges.sparkSession
-    val oType = edges.schema(O).dataType
     // NUL cannot occur inside a term/graph key (GraphMode contract), so
     // the composite-key suffix test is exact
     def notStart(ko: String): Boolean = mode match {
       case PlainMode => ko != start.key
       case GraphMode => !ko.endsWith("\u0000" + start.key)
     }
-    val adj = new scala.collection.mutable.HashMap[String, scala.collection.mutable.ArrayBuffer[(String, Any)]]()
-    edgeRows.foreach { r =>
-      if (!r.isNullAt(0) && !r.isNullAt(1))
-        adj.getOrElseUpdate(r.getString(0), scala.collection.mutable.ArrayBuffer.empty)
-          .append((r.getString(1), r.get(2)))
+    val reachedTerm = edgeRows.reverseIterator.map(r => r.getString(1) -> r.get(2)).toMap
+    val seeds = seedRows.toSeq.filter(!_.isNullAt(1)).map(r => r.getString(1) -> r.get(0))
+    val reached = driverBfs(adjacency(edgeRows), seeds.map(_._1).distinct, notStart) { n =>
+      if (n > budget) throw new PathBudgetExceeded(
+        s"path BFS from ${start.key} reached $n nodes > spark.graft.path.maxRows=$budget")
     }
-    val seedRows = seedRows0
-      .filter(!_.isNullAt(1)).map(r => (r.getString(1), r.get(0)))
-    val reached = new scala.collection.mutable.LinkedHashMap[String, Any]()
-    var frontier: Seq[String] = seedRows.map(_._1).distinct
-    while (frontier.nonEmpty) {
-      val fresh = scala.collection.mutable.LinkedHashMap[String, Any]()
-      frontier.foreach { k =>
-        adj.getOrElse(k, Nil).foreach { case (ko, o) =>
-          if (!reached.contains(ko) && !fresh.contains(ko)) fresh(ko) = o
-        }
-      }
-      reached ++= fresh
-      if (reached.size > budget) throw new PathBudgetExceeded(
-        s"path BFS from ${start.key} reached ${reached.size} nodes > " +
-          s"spark.graft.path.maxRows=$budget")
-      frontier = fresh.keysIterator.filter(notStart).toSeq
-    }
-    val out = scala.collection.mutable.LinkedHashMap[String, Any]()
-    out ++= reached
-    if (includeStart) seedRows.foreach { case (ko, o) =>
-      if (!out.contains(ko)) out(ko) = o
-    }
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField(O, oType),
-      org.apache.spark.sql.types.StructField("__ko",
-        org.apache.spark.sql.types.StringType)))
-    val rowList = new java.util.ArrayList[Row](out.size)
-    out.foreach { case (ko, o) => rowList.add(Row(o, ko)) }
-    spark.createDataFrame(rowList, schema)
+    val out = reached.toSeq.map(ko => Row(reachedTerm(ko), ko)) ++
+      (if (includeStart) seeds.filterNot(s => reached(s._1)).distinctBy(_._1)
+        .map { case (ko, o) => Row(o, ko) } else Nil)
+    val schema = StructType(Seq(
+      StructField(O, edges.schema(O).dataType), StructField("__ko", StringType)))
+    edges.sparkSession.createDataFrame(out.asJava, schema)
       .select(mode.startNode(col(O), start).as(S), col(O))
   }
-
-  /** Transitive closure: iterative join-dedup fixpoint with
-    * localCheckpoint per round to cut lineage (SURVEY §7.5) — the
-    * both-endpoints-free case; bound endpoints take [[reachableFrom]].
-    */
-  /** Edge-count ceiling for [[driverClosure]] (conf-overridable):
-    * small enough that the worst-case all-sources BFS
-    * (|nodes| × |edges|) is milliseconds and the collected rows KBs.
-    */
-  private def driverClosureEdges(df: DataFrame): Long =
-    df.sparkSession.conf.get("spark.graft.path.driverClosureEdges", "4096").toLong
 
   /** Cap on driver-held closure pairs, far under the 10M default row
     * budget: past it the distributed plan takes over (None) rather
@@ -424,49 +400,45 @@ object Paths {
     */
   private val DriverClosurePairs = 2000000L
 
-  /** Full transitive closure of a measured-tiny edge set on the
-    * driver: BFS from every source node. Output rows are identical to
-    * the distributed fixpoint's — every (s, o) with a ≥1-step path,
-    * deduplicated on keys.
+  /** Edge ceiling of [[closure]]'s driver plan, below `smallRows`:
+    * small enough that the worst-case all-sources BFS
+    * (|nodes| × |edges|) is milliseconds and the collected rows KBs.
     */
-  private def driverClosure(total: DataFrame,
-                            rows: Array[org.apache.spark.sql.Row],
+  private val DriverClosureEdges = 4096L
+
+  /** Full transitive closure of probed `(__ks, __ko, S, O)` edge rows
+    * on the driver: BFS from every source node. Output rows are
+    * identical to the distributed fixpoint's — every (s, o) with a
+    * ≥1-step path, deduplicated on keys.
+    */
+  private def driverClosure(total: DataFrame, rows: Array[Row],
                             budget: Long): Option[DataFrame] = {
-    import org.apache.spark.sql.Row
-    val spark = total.sparkSession
-    val term = new scala.collection.mutable.HashMap[String, Any]()
-    val adj = new scala.collection.mutable.HashMap[String, scala.collection.mutable.ArrayBuffer[String]]()
+    val term = scala.collection.mutable.HashMap.empty[String, Any]
     rows.foreach { r =>
-      if (!r.isNullAt(2) && !r.isNullAt(3)) {
-        val ks = r.getString(2); val ko = r.getString(3)
-        term.getOrElseUpdate(ks, r.get(0))
-        term.getOrElseUpdate(ko, r.get(1))
-        adj.getOrElseUpdate(ks, scala.collection.mutable.ArrayBuffer.empty) += ko
+      if (!r.isNullAt(0) && !r.isNullAt(1)) {
+        term.getOrElseUpdate(r.getString(0), r.get(2))
+        term.getOrElseUpdate(r.getString(1), r.get(3))
       }
     }
+    val adj = adjacency(rows)
     val out = new java.util.ArrayList[Row]()
     var pairs = 0L
     for (src <- adj.keysIterator) {
-      val reached = new scala.collection.mutable.LinkedHashSet[String]()
-      var frontier: Seq[String] = Seq(src)
-      while (frontier.nonEmpty) {
-        val fresh = scala.collection.mutable.ArrayBuffer.empty[String]
-        frontier.foreach(k => adj.getOrElse(k, Nil).foreach { ko =>
-          if (reached.add(ko)) fresh += ko
-        })
-        frontier = fresh.toSeq
-      }
+      val reached = driverBfs(adj, Seq(src))()
       pairs += reached.size
       if (pairs > budget) throw new PathBudgetExceeded(
         s"path closure reached $pairs pairs > spark.graft.path.maxRows=$budget")
       if (pairs > DriverClosurePairs) return None
       reached.foreach(ko => out.add(Row(term(src), term(ko))))
     }
-    val sf = total.schema
-    Some(spark.createDataFrame(out, org.apache.spark.sql.types.StructType(
-      Seq(sf(S), sf(O)))))
+    Some(total.sparkSession.createDataFrame(out,
+      StructType(Seq(total.schema(S), total.schema(O)))))
   }
 
+  /** Transitive closure: iterative join-dedup fixpoint with
+    * localCheckpoint per round to cut lineage (SURVEY §7.5) — the
+    * both-endpoints-free case; bound endpoints take [[reachableFrom]].
+    */
   private def closure(edges0: DataFrame, maxIters: Int = 64): DataFrame = {
     val budget = maxRowsBudget(edges0)
     val dedup = edges0.select(
@@ -475,21 +447,17 @@ object Paths {
       .dropDuplicates("__ks", "__ko")
     // Measured-size plan choice, one tier below the broadcast rounds:
     // a FEW-THOUSAND-edge set (the compiled path predicate is usually
-    // that selective) computes its whole closure on the driver — zero
-    // jobs per level instead of a join+anti-join+checkpoint round trip
-    // each. ONE bounded limit-collect both measures the set and fetches
-    // it (the former checkpoint + count + collect chain was three jobs
-    // for the same bytes). The pair budget still applies; a closure
-    // that outgrows the driver's own cap (rare: dense tiny graph) falls
-    // through and the distributed fixpoint below runs unchanged.
-    val dMax = math.min(driverClosureEdges(edges0), Int.MaxValue - 1L).toInt
-    val probe = dedup.limit(dMax + 1).collect()
-    if (probe.length <= dMax) {
-      driverClosure(dedup, probe, budget) match {
-        case Some(df) => return df
-        case None => // outgrew the driver cap — run distributed
-      }
-    }
+    // that selective; at most min(smallRows, 4096) edges) computes its
+    // whole closure on the driver — zero jobs per level instead of a
+    // join+anti-join+checkpoint round trip each. The pair budget still
+    // applies; a closure that outgrows the driver's own cap (rare:
+    // dense tiny graph) falls through and the distributed fixpoint
+    // below runs unchanged.
+    val driverPlan = DriverTier.collectIfAtMost(
+        dedup.select(col("__ks"), col("__ko"), col(S), col(O)),
+        math.min(smallRowsBudget(edges0), DriverClosureEdges))
+      .flatMap(driverClosure(dedup, _, budget))
+    if (driverPlan.isDefined) return driverPlan.get
     var total = dedup.localCheckpoint(true)
     var rows = total.count()
     if (rows > budget) throw new PathBudgetExceeded(

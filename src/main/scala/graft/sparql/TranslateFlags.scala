@@ -46,14 +46,17 @@ object TranslateFlags {
   val PathMaxRows = "spark.graft.path.maxRows"
   val PathMaxRowsDefault = 10000000L
 
-  /** Row count below which a path closure over a MEASURED-small edge
-    * set runs as a single-pass driver BFS instead of per-round
-    * distributed jobs (Paths). Driver-heap note: the routed plan
-    * collect()s the full edge rows — term structs included, roughly
-    * a few hundred bytes each — so the default 100k bounds one
-    * closure's driver footprint at tens of MB; N concurrent server
-    * queries on this path cost N × that. Size it against driver heap
-    * when raising it or raising server concurrency.
+  /** Driver-tier budget of the path plans (Paths, through
+    * `graft.DriverTier`): a bound-endpoint BFS whose MEASURED edge set
+    * (and GraphMode seed set) has at most this many rows runs as a
+    * single-pass driver BFS instead of per-round distributed jobs, and
+    * a free-endpoint closure goes to the driver at most
+    * `min(smallRows, 4096)` edges; 0 forces both distributed.
+    * Driver-heap note: the routed plan collect()s the full edge rows —
+    * term structs included, roughly a few hundred bytes each — so the
+    * default 100k bounds one closure's driver footprint at tens of MB;
+    * N concurrent server queries on this path cost N × that. Size it
+    * against driver heap when raising it or raising server concurrency.
     */
   val PathSmallRows = "spark.graft.path.smallRows"
 

@@ -432,19 +432,7 @@ object Update {
       val deltaSchema = schema.add("ord", org.apache.spark.sql.types.LongType)
       val delta = spark.createDataFrame(withOrd.asJava, deltaSchema)
         .withColumn("id", Term.nullTerm)
-      if (new java.io.File(s"$dir/statements_sub.parquet").exists()) {
-        // the delta is driver-local: hand appendToIndex its statistics
-        // so neither the checkpoint nor the stats-aggregation job runs
-        val ks = toAppend.map(_._2)
-        def maxGroup(of: QuadKey => String): Map[String, Long] =
-          ks.groupBy(_.p).map { case (p, g) =>
-            p -> g.groupBy(of).valuesIterator.map(_.size.toLong).max }
-        val stats = IndexMaintenance.DeltaStats(
-          rows = ks.size.toLong, maxOrd = ks.size.toLong - 1L,
-          counts = ks.groupBy(_.p).map { case (p, g) => p -> g.size.toLong },
-          dS = maxGroup(_.s), dO = maxGroup(_.o))
-        IndexMaintenance.appendToIndex(spark, dir, delta, stats = Some(stats))
-      } else appendToFlatStore(spark, dir, delta)
+      appendDelta(spark, dir, delta)
     }
     if (appended > 0 || undeleted > 0) bump(spark, dir)
     (appended, undeleted)
@@ -501,13 +489,21 @@ object Update {
       val delta = sorted
         .withColumn("id", Term.nullTerm)
         .withColumn("ord", monotonically_increasing_id())
-      if (new java.io.File(s"$dir/statements_sub.parquet").exists())
-        IndexMaintenance.appendToIndex(spark, dir, delta)
-      else appendToFlatStore(spark, dir, delta)
+      appendDelta(spark, dir, delta)
     }
     if (appended > 0 || undeleted > 0) bump(spark, dir)
     (appended, undeleted)
   }
+
+  /** Append a delta to the store at `dir`, whichever its layout. A
+    * driver-tier delta is a LocalRelation, which
+    * [[IndexMaintenance.appendToIndex]] appends without a checkpoint or
+    * stats job.
+    */
+  private def appendDelta(spark: SparkSession, dir: String, delta: DataFrame): Long =
+    if (new java.io.File(s"$dir/statements_sub.parquet").exists())
+      IndexMaintenance.appendToIndex(spark, dir, delta)
+    else appendToFlatStore(spark, dir, delta)
 
   /** Append a delta to a flat (non-permutation) store: statements +
     * labels tables, ords offset past the store's max — the same

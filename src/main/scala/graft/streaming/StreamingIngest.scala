@@ -76,7 +76,7 @@ object StreamingIngest {
         col("s.key"), col("p.key"), col("o.key"), col("id.key"))
     val schema = ranked.schema
     val ordIdx = schema.fieldIndex("ord")
-    val rdd = ranked.rdd.zipWithIndex.map { case (r, i) =>
+    val rdd = ranked.rdd.zipWithIndex().map { case (r, i) =>
       org.apache.spark.sql.Row.fromSeq(r.toSeq.updated(ordIdx, i))
     }
     spark.createDataFrame(rdd, schema).drop("__lh")

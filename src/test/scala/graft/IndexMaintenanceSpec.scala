@@ -77,6 +77,42 @@ class IndexMaintenanceSpec extends SparkTestBase {
     assert(!new java.io.File(idx, IndexMaintenance.PendingMarker).exists())
   }
 
+  test("a driver-local delta appends like a distributed one, without the stats jobs") {
+    // the same rows as a LocalRelation (Update's driver tier) and as a
+    // checkpointed plan: equal store, equal maintained stats, and the
+    // local one skips the checkpoint and the stats aggregation
+    val localDelta = spark.createDataFrame(
+      java.util.Arrays.asList(delta.collect(): _*), delta.schema)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    def jobsOf(body: => Unit): Int = {
+      jobs.set(0)
+      body
+      // listener events dispatch asynchronously; wait until the count
+      // stabilizes (two equal reads)
+      var prev = -1
+      var tries = 0
+      while (prev != jobs.get() && tries < 20) {
+        prev = jobs.get(); Thread.sleep(150); tries += 1
+      }
+      jobs.get()
+    }
+    val (local, dist) = (buildBaseIdx(), buildBaseIdx())
+    spark.sparkContext.addSparkListener(listener)
+    val (localJobs, distJobs) = try {
+      (jobsOf(IndexMaintenance.appendToIndex(spark, local, localDelta)),
+        jobsOf(IndexMaintenance.appendToIndex(spark, dist, delta)))
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assertStoreEquals(local, "local append")
+    assert(IndexMaintenance.readMeta(spark, local) === IndexMaintenance.readMeta(spark, dist))
+    assert(WikidataIngest.predCounts(local) === WikidataIngest.predCounts(dist))
+    assert(WikidataIngest.predFanout(local) === WikidataIngest.predFanout(dist))
+    assert(localJobs + 2 <= distJobs, s"local append ran $localJobs jobs, distributed $distJobs")
+  }
+
   test("repeated appends + compaction: results unchanged, files bounded") {
     val idx = buildBaseIdx()
     // three appends in ord order (chunk boundaries by ord tertiles keep

@@ -41,6 +41,18 @@ class MainSpec extends SparkTestBase {
     }
   }
 
+  test("create-index without --buckets sizes the bucket count from the flat store") {
+    val flat = Workspace.scratch("graft-main"); val indexed = Workspace.scratch("graft-main")
+    assert(Main.run(Array("create-db", ingest.WikidataIngest.fixturePath, flat)) === 0)
+    assert(Main.run(Array("create-index", flat, indexed)) === 0)
+    val sized = ingest.WikidataIngest.sizedBuckets(
+      ingest.WikidataIngest.dirBytes(s"$flat/statements.parquet"))
+    // a fixture store is far below 64 buckets' worth of bytes
+    assert(sized < ingest.WikidataIngest.NumPredBuckets)
+    assert(ingest.WikidataIngest.storeBuckets(indexed) === Some(sized))
+    assert(spark.read.parquet(s"$indexed/statements.parquet").count() === 3385L)
+  }
+
   test("unknown mode and missing args exit 2 with usage") {
     assert(Main.run(Array("frobnicate")) === 2)
     assert(Main.run(Array.empty[String]) === 2)

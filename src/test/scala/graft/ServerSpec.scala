@@ -213,14 +213,19 @@ class ServerSpec extends SparkTestBase {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration._
     import scala.concurrent.ExecutionContext.Implicits.global
-    // one deliberately slow query (triple cartesian, can only die by
-    // timeout) + 15 fast ones, half GET half POST. FAIR pools must let
-    // the fast ones through while the runaway occupies the cluster,
-    // and the timeout must fire for the runaway REQUEST only.
+    // one deliberately slow query + 15 fast ones, half GET half POST.
+    // FAIR pools must let the fast ones through while the runaway
+    // occupies the cluster, and the timeout must fire for the runaway
+    // REQUEST only. The runaway is a triple cartesian (3385^3 rows)
+    // under a filter that holds for no row and spans all three
+    // patterns, so nothing prunes it: it yields no row and can only
+    // die by timeout. The bare cartesian would instead reach the
+    // 1,000,000-row JSON cap (a 500) inside the timeout on a fast core.
     val fastQ = "SELECT ?p ?b WHERE { wdt:Q31 ?p ?b . } LIMIT 3"
     val fastGet = "/query?query=" + java.net.URLEncoder.encode(fastQ, "UTF-8")
     val runaway = "/query?query=" + java.net.URLEncoder.encode(
-      "SELECT ?a ?b ?c WHERE { ?a ?p1 ?o1 . ?b ?p2 ?o2 . ?c ?p3 ?o3 }", "UTF-8")
+      "SELECT ?a ?b ?c WHERE { ?a ?p1 ?o1 . ?b ?p2 ?o2 . ?c ?p3 ?o3 " +
+        "FILTER(STRLEN(CONCAT(STR(?a), STR(?b), STR(?c))) < 0) }", "UTF-8")
     get(fastGet) // warm the translation path outside the measured window
     spark.conf.set("spark.graft.server.timeoutMs", "20000")
     try {
@@ -363,13 +368,21 @@ class ServerSpec extends SparkTestBase {
     spark.conf.set("spark.graft.server.maxBodyBytes", 1024)
     try {
       val big = "SELECT ?p WHERE { " + ("# pad \n" * 400) + "}"
-      val (code, body, _) = post("/query", big, "application/sparql-query")
-      assert(code === 413 && body.contains("maxBodyBytes"))
+      for ((path, ct) <- Seq("/query" -> "application/sparql-query",
+                             "/update" -> "application/sparql-update")) {
+        val (code, body, _) = post(path, big, ct)
+        assert(code === 413 && body.contains("maxBodyBytes"), path)
+      }
       // at the cap boundary the query still runs
       val (ok, _, _) = post("/query",
         "ASK { wd:Q999999999 ?p ?o }", "application/sparql-query")
       assert(ok === 200)
     } finally spark.conf.unset("spark.graft.server.maxBodyBytes")
+  }
+
+  test("a malformed percent-escape in an /update form body → 400") {
+    val (code, body, _) = post("/update", "update=%zz", "application/x-www-form-urlencoded")
+    assert(code === 400 && body.startsWith("malformed request encoding"), body)
   }
 
   test("OPTIONS preflight advertises POST with CORS headers") {
@@ -556,7 +569,9 @@ class ServerSpec extends SparkTestBase {
     // connection. The handler starts a chunked response and force-
     // closes mid-body; a working close surfaces client-side as a
     // truncated/failed read, never a clean terminal chunk.
-    val closed = new java.util.concurrent.atomic.AtomicBoolean(false)
+    // completed by the handler AFTER the close: the client can see the
+    // dropped connection before the handler thread records the outcome
+    val closed = scala.concurrent.Promise[Boolean]()
     val ctx = server.createContext("/force-close-probe",
       (ex: com.sun.net.httpserver.HttpExchange) => {
         ex.sendResponseHeaders(200, 0L) // chunked
@@ -564,7 +579,7 @@ class ServerSpec extends SparkTestBase {
         os.write("partial".getBytes("UTF-8"))
         os.flush()
         val ok = QueryServer.forceCloseConnection(ex)
-        closed.set(ok)
+        closed.success(ok)
         // failure path: finish the exchange normally so the client
         // fails the assertion immediately instead of hanging to its
         // read timeout
@@ -576,7 +591,9 @@ class ServerSpec extends SparkTestBase {
           val (_, body, _) = get("/force-close-probe")
           body != "partial" // a retained terminal chunk would complete the body
         } catch { case _: java.io.IOException => true }
-      assert(closed.get(), "forceCloseConnection must succeed under the build's --add-opens")
+      val ok = scala.concurrent.Await.result(closed.future,
+        scala.concurrent.duration.Duration(30, "s"))
+      assert(ok, "forceCloseConnection must succeed under the build's --add-opens")
       assert(failed, "a force-closed chunked response must not read as complete")
     } finally server.removeContext(ctx)
   }

@@ -158,7 +158,7 @@ class TemporalSpec extends SparkTestBase {
             org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
               new org.apache.hadoop.fs.Path(f.getAbsolutePath), conf))
           try r.getFooter.getBlocks.asScala.toSeq.map { blk =>
-            val st = blk.getColumns.asScala
+            val st: org.apache.parquet.column.statistics.Statistics[_] = blk.getColumns.asScala
               .find(_.getPath.toDotString == colName).get.getStatistics
             (st.genericGetMin.asInstanceOf[Number].longValue,
               st.genericGetMax.asInstanceOf[Number].longValue)

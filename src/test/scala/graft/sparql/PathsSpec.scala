@@ -84,21 +84,21 @@ class PathsSpec extends SparkTestBase {
   }
 
   test("driver closure (free-free small plan) equals the distributed fixpoint") {
-    // default driverClosureEdges routes these tiny edge sets to the
-    // all-sources driver BFS; 0 forces the shuffle fixpoint — the two
+    // the default driver cap routes these tiny edge sets to the
+    // all-sources driver BFS; smallRows=0 forces the fixpoint — the two
     // MUST agree on cycles (self-pairs), chains, and zero-or-more
     val shapes = Seq(
       PathOp(Var("a"), POneOrMore(p2), Var("b")),
       PathOp(Var("a"), PZeroOrMore(p2), Var("b")),
       PathOp(Var("a"), POneOrMore(PAlt(p2, PReverse(p2))), Var("b")))
     val viaDriver = shapes.map(run)
-    spark.conf.set("spark.graft.path.driverClosureEdges", "0")
+    spark.conf.set("spark.graft.path.smallRows", "0")
     try {
       val viaCluster = shapes.map(run)
       viaDriver.zip(viaCluster).zip(shapes).foreach { case ((d, c), s) =>
         assert(d === c, s"closure plans diverge for $s")
       }
-    } finally spark.conf.unset("spark.graft.path.driverClosureEdges")
+    } finally spark.conf.unset("spark.graft.path.smallRows")
   }
 
   test("spark.graft.path.maxRows fails a runaway closure fast with a clear error") {
